@@ -145,8 +145,6 @@ object Pipeline {
 
   // — registered end-to-end binding ——————————————————————————————————
 
-  private val e2eFixtures = new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long)]]()
-
   /** Render rows as pp-schema CSV lines (all fields quoted,
     * headerless — the reference's actual file format). */
   private def ppCsvLines(rows: DataFrame, keyCol: String, priceCol: String,
@@ -167,33 +165,21 @@ object Pipeline {
     ppCsvLines(rows, keyCol, priceCol, dateCol, opCol)
       .coalesce(1).write.mode("overwrite").text(path)
 
-  /** Registered `q_pipeline_e2e`: the WHOLE reference DAG
-    * as one run — a pp-complete file rendered from `orders`
-    * initializes the snapshot store, the decision log archives it,
-    * a monthly update file (every 7th key price-bumped via C, every
-    * 29th deleted via D, offset twins added via A) merges broadcast,
-    * re-offering the SAME file garbage-collects (content-hash dedup),
-    * maintenance compacts, and verify reconciles the live view
-    * against the original file. The output is the run's operation
-    * ledger — the stats the reference writes to its Postgres log
-    * tables. Every ledger value is pure modular arithmetic over the
-    * orders keyspace, so the DuckDB oracle derives the whole run in
-    * CLOSED FORM and a hash-match proves the orchestration end to
-    * end: merge outcome counts, content-hash idempotence on the
-    * re-offer, compaction's version bump, and the reconcile counts
-    * (changed rows on both only-sides, adds db-only, deletes
-    * file-only). */
-  def pipelineE2E(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val stats = e2eFixtures.computeIfAbsent(dir, _ => {
-      val tmp = graft.util.Scratch.dir("pipeline_q")
-      val table = s"$tmp/table"
+  /** The two e2e queries' inputs, rendered once per data dir: the
+    * pp-complete file `complete.csv` from `orders`, and one monthly
+    * update (every 7th key price-bumped via C, every 29th deleted via
+    * D, offset twins added via A) delivered twice — as the plain file
+    * `update.csv` and as the archive feed `feed/` (the target entry
+    * beside writeZips' decoy README, plus a corrupt archive that must
+    * quarantine in-path). */
+  private def e2eInputs(spark: SparkSession, dir: String): String =
+    graft.util.Scratch.fixture("pipeline_e2e_in", dir) { in =>
       val o = graft.sources.Tables.orders(spark, dir).select(
         col("o_orderkey").as("k"),
         col("o_totalprice").cast("long").as("price"),
         to_date(col("o_orderdate")).as("d"))
       writePpCsv(o.withColumn("op", lit("A")), "k", "price", "d", "op",
-        s"$tmp/complete.csv")
+        s"$in/complete.csv")
       // add-twin keys must be ABSENT from the base at ANY scale factor
       // (the oracle's closed form assumes every A lands as add_and_added),
       // so the offset derives from the actual keyspace, never a constant
@@ -208,30 +194,52 @@ object Pipeline {
           .otherwise(col("k")))
         .withColumn("price", when(col("op") === "C", col("price") + 7L)
           .otherwise(col("price")))
-      writePpCsv(changes, "k", "price", "d", "op", s"$tmp/update.csv")
-      val b = Seq.newBuilder[(String, Long)]
-      b += "initial_rows" -> initialize(spark, s"$tmp/complete.csv", table)
-      val (dec1, h1) = decideAndLog(spark, s"$tmp/log",
-        "update.csv", PricePaidCsv.normalized(spark, s"$tmp/update.csv"))
-      b += "decision_first_offer_archive" -> (if (dec1 == "archive") 1L else 0L)
-      applyMonthly(spark, s"$tmp/update.csv", table).foreach {
-        case (k, v) => b += s"op_$k" -> v
-      }
-      val (dec2, h2) = decideAndLog(spark, s"$tmp/log",
-        "update.csv", PricePaidCsv.normalized(spark, s"$tmp/update.csv"))
-      b += "decision_reoffer_gc" -> (if (dec2 == "garbage_collect" && h1 == h2) 1L else 0L)
-      b += "maintained_version" -> maintain(spark, table)
-      b += "live_rows" -> current(spark, table).count()
-      verifyAndFix(spark, s"$tmp/complete.csv", table).foreach {
-        case (k, v) => b += s"verify_$k" -> v
-      }
-      b.result()
-    })
-    stats.toDF("stat", "value").orderBy("stat")
-  }
+      writePpCsv(changes, "k", "price", "d", "op", s"$in/update.csv")
+      graft.sources.ZipSource.writeZips(
+        ppCsvLines(changes, "k", "price", "d", "op")
+          .withColumn("m", lit("2024-05")),
+        "m", "value", s"$in/feed", m => s"PPMS_update_$m.txt")
+      val bad = new java.io.FileOutputStream(s"$in/feed/PPMS_update_bad.zip")
+      bad.write("not an archive".getBytes("UTF-8")); bad.close()
+    }
 
-  private val zipE2eFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long)]]()
+  /** Registered `q_pipeline_e2e`: the WHOLE reference DAG
+    * as one run — the pp-complete file initializes a new snapshot
+    * store, a new decision log archives the monthly update, the
+    * update merges broadcast, re-offering the SAME file
+    * garbage-collects (content-hash dedup), maintenance compacts, and
+    * verify reconciles the live view against the original file. The
+    * output is the run's operation ledger — the stats the reference
+    * writes to its Postgres log tables. Every ledger value is pure
+    * modular arithmetic over the orders keyspace, so the DuckDB oracle
+    * derives the whole run in CLOSED FORM and a hash-match proves the
+    * orchestration end to end: merge outcome counts, content-hash
+    * idempotence on the re-offer, compaction's version bump, and the
+    * reconcile counts (changed rows on both only-sides, adds db-only,
+    * deletes file-only). */
+  def pipelineE2E(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val in = e2eInputs(spark, dir)
+    val tmp = graft.util.Scratch.dir("pipeline_q")
+    val table = s"$tmp/table"
+    val b = Seq.newBuilder[(String, Long)]
+    b += "initial_rows" -> initialize(spark, s"$in/complete.csv", table)
+    val (dec1, h1) = decideAndLog(spark, s"$tmp/log",
+      "update.csv", PricePaidCsv.normalized(spark, s"$in/update.csv"))
+    b += "decision_first_offer_archive" -> (if (dec1 == "archive") 1L else 0L)
+    applyMonthly(spark, s"$in/update.csv", table).foreach {
+      case (k, v) => b += s"op_$k" -> v
+    }
+    val (dec2, h2) = decideAndLog(spark, s"$tmp/log",
+      "update.csv", PricePaidCsv.normalized(spark, s"$in/update.csv"))
+    b += "decision_reoffer_gc" -> (if (dec2 == "garbage_collect" && h1 == h2) 1L else 0L)
+    b += "maintained_version" -> maintain(spark, table)
+    b += "live_rows" -> current(spark, table).count()
+    verifyAndFix(spark, s"$in/complete.csv", table).foreach {
+      case (k, v) => b += s"verify_$k" -> v
+    }
+    b.result().toDF("stat", "value").orderBy("stat")
+  }
 
   /** Registered `q_pipeline_zip_e2e`: the reference's ACTUAL monthly
     * delivery seam run end-to-end — the update lands as a ZIP ARCHIVE
@@ -249,65 +257,35 @@ object Pipeline {
     * without losing a row. */
   def pipelineZipE2E(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val stats = zipE2eFixtures.computeIfAbsent(dir, _ => {
-      val tmp = graft.util.Scratch.dir("pipeline_zip_q")
-      val table = s"$tmp/table"
-      val feed = s"$tmp/feed"
-      val o = graft.sources.Tables.orders(spark, dir).select(
-        col("o_orderkey").as("k"),
-        col("o_totalprice").cast("long").as("price"),
-        to_date(col("o_orderdate")).as("d"))
-      writePpCsv(o.withColumn("op", lit("A")), "k", "price", "d", "op",
-        s"$tmp/complete.csv")
-      val addOffset = o.agg(max(col("k"))).head().getLong(0) + 1L
-      val changes = o
-        .withColumn("op",
-          when(col("k") % 29 === 0, "D")
-            .when(col("k") % 7 === 0, "C")
-            .when(col("k") % 13 === 0, "A"))
-        .filter(col("op").isNotNull)
-        .withColumn("k", when(col("op") === "A", col("k") + addOffset)
-          .otherwise(col("k")))
-        .withColumn("price", when(col("op") === "C", col("price") + 7L)
-          .otherwise(col("price")))
-      // the monthly update DELIVERED AS AN ARCHIVE: writeZips plants
-      // the decoy README beside the target entry; a corrupt archive
-      // lands in the same feed and must quarantine in-path
-      graft.sources.ZipSource.writeZips(
-        ppCsvLines(changes, "k", "price", "d", "op")
-          .withColumn("m", lit("2024-05")),
-        "m", "value", feed, m => s"PPMS_update_$m.txt")
-      val bad = new java.io.FileOutputStream(s"$feed/PPMS_update_bad.zip")
-      bad.write("not an archive".getBytes("UTF-8")); bad.close()
-
-      val b = Seq.newBuilder[(String, Long)]
-      b += "initial_rows" -> initialize(spark, s"$tmp/complete.csv", table)
-      // extraction through the connector: quarantine + decoy visible,
-      // target selected by (pushed) entry name
-      val ents = spark.read.format("graft-zip").load(s"$feed/*.zip")
-      b += "extract_quarantined" -> ents.filter(!col("ok")).count()
-      b += "extract_entries_total" -> ents.filter(col("ok")).count()
-      val target = ents.filter(col("ok") &&
-        col("entry") === "PPMS_update_2024-05.txt")
-      b += "extract_target_entries" -> target.count()
-      graft.sources.ZipSource.textLines(target)
-        .select(col("line").as("value"))
-        .coalesce(1).write.mode("overwrite").text(s"$tmp/extracted")
-      val parsed = () => PricePaidCsv.normalized(spark, s"$tmp/extracted")
-      val (dec1, h1) = decideAndLog(spark, s"$tmp/log",
-        "PPMS_update_2024-05.zip", parsed())
-      b += "decision_first_offer_archive" -> (if (dec1 == "archive") 1L else 0L)
-      applyMonthly(spark, s"$tmp/extracted", table).foreach {
-        case (k, v) => b += s"op_$k" -> v
-      }
-      // the SAME archive re-offered: re-extract through the connector
-      // and the content-hash decision must garbage-collect
-      val (dec2, h2) = decideAndLog(spark, s"$tmp/log",
-        "PPMS_update_2024-05.zip", parsed())
-      b += "decision_reoffer_gc" -> (if (dec2 == "garbage_collect" && h1 == h2) 1L else 0L)
-      b += "live_rows" -> current(spark, table).count()
-      b.result()
-    })
-    stats.toDF("stat", "value").orderBy("stat")
+    val in = e2eInputs(spark, dir)
+    val tmp = graft.util.Scratch.dir("pipeline_zip_q")
+    val table = s"$tmp/table"
+    val b = Seq.newBuilder[(String, Long)]
+    b += "initial_rows" -> initialize(spark, s"$in/complete.csv", table)
+    // extraction through the connector: quarantine + decoy visible,
+    // target selected by (pushed) entry name
+    val ents = spark.read.format("graft-zip").load(s"$in/feed/*.zip")
+    b += "extract_quarantined" -> ents.filter(!col("ok")).count()
+    b += "extract_entries_total" -> ents.filter(col("ok")).count()
+    val target = ents.filter(col("ok") &&
+      col("entry") === "PPMS_update_2024-05.txt")
+    b += "extract_target_entries" -> target.count()
+    graft.sources.ZipSource.textLines(target)
+      .select(col("line").as("value"))
+      .coalesce(1).write.mode("overwrite").text(s"$tmp/extracted")
+    val parsed = () => PricePaidCsv.normalized(spark, s"$tmp/extracted")
+    val (dec1, h1) = decideAndLog(spark, s"$tmp/log",
+      "PPMS_update_2024-05.zip", parsed())
+    b += "decision_first_offer_archive" -> (if (dec1 == "archive") 1L else 0L)
+    applyMonthly(spark, s"$tmp/extracted", table).foreach {
+      case (k, v) => b += s"op_$k" -> v
+    }
+    // the SAME archive re-offered: re-extract through the connector
+    // and the content-hash decision must garbage-collect
+    val (dec2, h2) = decideAndLog(spark, s"$tmp/log",
+      "PPMS_update_2024-05.zip", parsed())
+    b += "decision_reoffer_gc" -> (if (dec2 == "garbage_collect" && h1 == h2) 1L else 0L)
+    b += "live_rows" -> current(spark, table).count()
+    b.result().toDF("stat", "value").orderBy("stat")
   }
 }

@@ -294,7 +294,7 @@ object Media {
     * degrading — while healthy rows are untouched (spec-pinned; the
     * un-planted `m_media_meta` row count is unchanged). */
   def mediaQuarantine(spark: SparkSession, dir: String): DataFrame =
-    decodeMetaTagged(cachedFixture(s"media-corrupt|$dir", spark)(
+    decodeMetaTagged(cachedFixture("media-corrupt", dir, spark)(
         mediaTable(spark, dir, plantCorrupt = true)))
       .filter(!col("decode_ok"))
       .select(col("media_id"), col("kind"), col("n_bytes"))
@@ -305,7 +305,7 @@ object Media {
     * computed in the SAME pass as the decode (one corpus scan, no
     * join; the payload is never read twice). */
   def mediaMeta(spark: SparkSession, dir: String): DataFrame =
-    decodeWith(cachedFixture(s"media|$dir", spark)(mediaTable(spark, dir)),
+    decodeWith(cachedFixture("media", dir, spark)(mediaTable(spark, dir)),
         sha2(col("payload"), 256))
       .select(col("_1.*"), col("_2").as("payload_sha"))
       .orderBy("media_id")
@@ -325,7 +325,7 @@ object Media {
     * frames sample two rows and the rest one — both branches of the
     * stride arithmetic are exercised. */
   def mediaFrames(spark: SparkSession, dir: String): DataFrame =
-    sampleFrames(decodeMeta(cachedFixture(s"media|$dir", spark)(
+    sampleFrames(decodeMeta(cachedFixture("media", dir, spark)(
         mediaTable(spark, dir)).filter(col("kind") === "video")).toDF(),
       everyN = 8)
       .orderBy("media_id", "frame_idx")
@@ -388,7 +388,7 @@ object Media {
   /** Registered resize query (rows-only): per-image target geometry +
     * payload size — scalar columns only for the driver dump. */
   def mediaResize(spark: SparkSession, dir: String): DataFrame =
-    resizeImages(cachedFixture(s"media|$dir", spark)(mediaTable(spark, dir))
+    resizeImages(cachedFixture("media", dir, spark)(mediaTable(spark, dir))
       .filter(col("kind") === "image")).toDF()
       .select(col("media_id"), col("src_width"), col("src_height"),
         col("width"), col("height"), length(col("payload")).as("n_bytes"))
@@ -562,29 +562,20 @@ object Media {
     out
   }
 
-  /** One synthetic media fixture per (variant, source dir) per JVM,
-    * materialized to scratch parquet and shared by every registered
-    * media query: the synthetic ENCODE of the fixture corpus
-    * (PNG/WAV/GIF writers) is setup, not the work the queries claim —
-    * and the video dedup query's two consumers (frame counts + band
-    * join) would otherwise re-encode the whole clip table twice per
-    * pass. The timed path keeps everything real: payload DECODE,
-    * metadata extraction, resize re-encode, fingerprinting, band
-    * search. */
-  private val dedupFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def cachedFixture(key: String, spark: SparkSession)
+  /** One synthetic media table per (variant, source dir), shared by
+    * every registered media query: the synthetic ENCODE of the corpus
+    * (PNG/WAV/GIF writers) is the queries' input; payload DECODE,
+    * metadata extraction, resize re-encode, fingerprinting and band
+    * search stay the work each query runs. */
+  private def cachedFixture(variant: String, dir: String, spark: SparkSession)
                            (build: => DataFrame): DataFrame = {
-    val path = dedupFixtures.computeIfAbsent(key, _ => {
-      val p = graft.util.Scratch.dir("media_fixture") + "/table"
+    val path = graft.util.Scratch.fixture(s"media_$variant", dir) { p =>
       // one file per core: the parquet read splits by file, so the
       // downstream per-partition decode actually parallelizes
       build.repartition(spark.sparkContext.defaultParallelism)
-        .write.parquet(p)
-      p
-    })
-    spark.read.parquet(path)
+        .write.parquet(s"$p/table")
+    }
+    spark.read.parquet(s"$path/table")
   }
 
   /** Registered image near-dup query (rows-only: the dHash depends on
@@ -592,7 +583,7 @@ object Media {
     * planted-pair recovery is spec-pinned instead): perceptual
     * duplicate pairs over the planted table. */
   def mediaDedup(spark: SparkSession, dir: String): DataFrame =
-    imageNearDupOf(cachedFixture(s"image|$dir", spark)(
+    imageNearDupOf(cachedFixture("image", dir, spark)(
       imageTableWithNearDups(spark, dir)))
 
   // ——— audio perceptual dedup ————————————————————————————————————
@@ -755,7 +746,7 @@ object Media {
   /** Registered audio near-dup query (rows-only — the fingerprint
     * rides the PCM decode; planted-pair recovery is spec-pinned). */
   def mediaDedupAudio(spark: SparkSession, dir: String): DataFrame =
-    audioNearDupOf(cachedFixture(s"audio|$dir", spark)(
+    audioNearDupOf(cachedFixture("audio", dir, spark)(
       audioTableWithNearDups(spark, dir)))
 
   // ——— video perceptual dedup ————————————————————————————————————
@@ -913,16 +904,15 @@ object Media {
   /** Registered video near-dup query (rows-only — frame dHashes ride
     * the GIF decode; planted-pair recovery is spec-pinned). */
   def mediaDedupVideo(spark: SparkSession, dir: String): DataFrame =
-    videoNearDupOf(cachedFixture(s"video|$dir", spark)(
+    videoNearDupOf(cachedFixture("video", dir, spark)(
       videoTableWithNearDups(spark, dir)))
 
   // — SHOT SEGMENTATION (scene-cut detection) ————————————————————————
 
-  /** The multi-shot clip table, one fixture per dir per JVM — shared
-    * by the scene-cut and per-shot-sampling registrations so they can
-    * never drift apart. */
+  /** The multi-shot clip table, shared by the scene-cut and
+    * per-shot-sampling registrations so they can never drift apart. */
   private def shotClipTable(spark: SparkSession, dir: String): DataFrame =
-    cachedFixture(s"shots|$dir", spark) {
+    cachedFixture("shots", dir, spark) {
       import spark.implicits._
       Tables.documents(spark, dir)
         .filter(col("doc_id") % 3 === 0)

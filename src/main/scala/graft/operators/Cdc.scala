@@ -172,9 +172,6 @@ object Cdc {
       .withColumn("price", col("price").cast(DoubleType))
       .orderBy("o_orderkey")
 
-  private val sqlFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The SAME decision matrix routed through ANSI `MERGE INTO` against
     * the snapshot store — and answering the SAME DuckDB oracle as
     * `q_cdc_merge`, so the driver hash-compares the SQL row-level
@@ -187,11 +184,9 @@ object Cdc {
     * state (price, is_deleted) is read back from the MERGE-written
     * chain head — those hashed cells come from the SQL write path, not
     * from the classification — and only the report-side `outcome`
-    * label is joined in from the shared classification plan.
-    * Fixture once per JVM; the query times the chain-merged census. */
+    * label is joined in from the shared classification plan. */
   def mergeResultSql(spark: SparkSession, dir: String): DataFrame = {
-    val fixture = sqlFixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("cdc_merge_sql")
+    val fixture = graft.util.Scratch.fixture("cdc_merge_sql", dir) { f =>
       val t = s"$f/t"
       graft.sources.Sinks.publishSnapshot(
         baseTable(spark, dir).withColumn("odate", lit(java.sql.Date.valueOf("2024-01-01"))),
@@ -211,8 +206,7 @@ object Cdc {
            |  THEN INSERT (o_orderkey, price, is_deleted, odate)
            |    VALUES (coalesce(c.o_orderkey, 0L), c.new_price, 'F', DATE'2024-01-01')
            |""".stripMargin)
-      f
-    })
+    }
     val outcomes = merged(spark, dir).select(col("o_orderkey"), col("outcome"))
     spark.sql(s"SELECT o_orderkey, price, is_deleted FROM graft.`$fixture/t`")
       .withColumn("price", col("price").cast(DoubleType))

@@ -28,6 +28,53 @@ object CdcMerge {
   private val endsDeleted = Seq(
     "delete_and_deleted", "delete_but_not_identical_and_changed_and_deleted")
 
+  /** The reference's 15-outcome decision matrix over the renamed
+    * `__base_*`/`__new_*` columns. `inBase` is the key's presence in
+    * the base — a literal where the plan already knows it, so Catalyst
+    * folds the dead branches away. */
+  private def outcome(inBase: Column, compareCols: Seq[String]): Column = {
+    val op = col("record_op")
+    val wasDeleted = col("is_deleted") === "T"
+    // null-safe equality: two null fields (empty CSV cells) count as
+    // identical, as in the reference's row comparison
+    val identical = compareCols
+      .map(x => col(s"__new_$x") <=> col(s"__base_$x"))
+      .reduce(_ && _)
+    when(!inBase && op === "A", "add_and_added")
+      .when(!inBase && op === "C", "change_but_missing_and_added")
+      .when(!inBase && op === "D", "delete_but_missing_and_ignored")
+      .when(!inBase, "invalid_op_missing_and_ignored")
+      .when(op.isNull && wasDeleted, "unchanged_deleted")
+      .when(op.isNull, "unchanged")
+      .when(wasDeleted && op === "A", "add_but_deleted_and_changed")
+      .when(wasDeleted && op === "C", "change_but_deleted_and_ignored")
+      .when(wasDeleted && op === "D", "delete_but_deleted_and_ignored")
+      .when(op === "A" && identical, "add_but_already_identical_and_ignored")
+      .when(op === "A", "add_but_changed")
+      .when(op === "C" && identical, "change_but_already_identical_and_ignored")
+      .when(op === "C", "change_and_changed")
+      .when(op === "D" && identical, "delete_and_deleted")
+      .when(op === "D", "delete_but_not_identical_and_changed_and_deleted")
+      // any other op marker is malformed input: keep the base row
+      // untouched and surface the row in stats instead of silently
+      // soft-deleting it via the catch-all
+      .otherwise("invalid_op_ignored")
+  }
+
+  /** Final values and `is_deleted` from the outcome: (key,
+    * compareCols, is_deleted, outcome). */
+  private def finish(classified: DataFrame, key: String,
+                     compareCols: Seq[String]): DataFrame = {
+    val outcome = col("outcome")
+    val takes = outcome.isin(takesNew: _*)
+    classified.select(col(key) +:
+      compareCols.map(x => when(takes, col(s"__new_$x")).otherwise(col(s"__base_$x")).as(x)) :+
+      when(outcome.isin(endsDeleted: _*), "T")
+        .when(outcome === "add_but_deleted_and_changed", "F")
+        .when(col("is_deleted") === "T", "T").otherwise("F").as("is_deleted") :+
+      outcome: _*)
+  }
+
   /** @param base        current table: key, compareCols, `is_deleted` ('T'/'F')
     * @param changes     change file: key, `record_op`, compareCols (new values)
     * @param key         join key column name
@@ -38,47 +85,11 @@ object CdcMerge {
     val b = compareCols.foldLeft(base)((df, c) => df.withColumnRenamed(c, s"__base_$c"))
       .withColumn("__in_base", lit(1))
     val c = compareCols.foldLeft(changes)((df, x) => df.withColumnRenamed(x, s"__new_$x"))
-    val op = col("record_op")
     // explicit presence marker — compare columns may legitimately be
     // null (empty CSV cells), so their nullness can't signal absence
-    val inBase = col("__in_base").isNotNull
-    val wasDeleted = col("is_deleted") === "T"
-    // null-safe equality: two null fields (empty CSV cells) count as
-    // identical, as in the reference's row comparison
-    val identical = compareCols
-      .map(x => col(s"__new_$x") <=> col(s"__base_$x"))
-      .reduce(_ && _)
-    val merged = b.join(c, Seq(key), "full_outer")
-      .withColumn("outcome",
-        when(!inBase && op === "A", "add_and_added")
-        .when(!inBase && op === "C", "change_but_missing_and_added")
-        .when(!inBase && op === "D", "delete_but_missing_and_ignored")
-        .when(!inBase, "invalid_op_missing_and_ignored")
-        .when(inBase && op.isNull && wasDeleted, "unchanged_deleted")
-        .when(inBase && op.isNull, "unchanged")
-        .when(wasDeleted && op === "A", "add_but_deleted_and_changed")
-        .when(wasDeleted && op === "C", "change_but_deleted_and_ignored")
-        .when(wasDeleted && op === "D", "delete_but_deleted_and_ignored")
-        .when(op === "A" && identical, "add_but_already_identical_and_ignored")
-        .when(op === "A", "add_but_changed")
-        .when(op === "C" && identical, "change_but_already_identical_and_ignored")
-        .when(op === "C", "change_and_changed")
-        .when(op === "D" && identical, "delete_and_deleted")
-        .when(op === "D", "delete_but_not_identical_and_changed_and_deleted")
-        // any other op marker is malformed input: keep the base row
-        // untouched and surface the row in stats instead of silently
-        // soft-deleting it via the catch-all
-        .otherwise("invalid_op_ignored"))
-    val takes = col("outcome").isin(takesNew: _*)
-    val withFinal = compareCols.foldLeft(merged)((df, x) =>
-      df.withColumn(x, when(takes, col(s"__new_$x")).otherwise(col(s"__base_$x"))))
-      .withColumn("final_deleted",
-        when(col("outcome").isin(endsDeleted: _*), "T")
-        .when(col("outcome") === "add_but_deleted_and_changed", "F")
-        .when(wasDeleted, "T").otherwise("F"))
-    withFinal.select(col(key) +: compareCols.map(col) :+
-      col("final_deleted") :+ col("outcome"): _*)
-      .withColumnRenamed("final_deleted", "is_deleted")
+    finish(b.join(c, Seq(key), "full_outer")
+      .withColumn("outcome", outcome(col("__in_base").isNotNull, compareCols)),
+      key, compareCols)
   }
 
   /** Post-update table: drop the never-existed keys (D or malformed
@@ -110,57 +121,23 @@ object CdcMerge {
                      compareCols: Seq[String]): DataFrame = {
     val b = compareCols.foldLeft(base)((df, c) => df.withColumnRenamed(c, s"__base_$c"))
     val c = compareCols.foldLeft(changes)((df, x) => df.withColumnRenamed(x, s"__new_$x"))
-    val op = col("record_op")
-    val wasDeleted = col("is_deleted") === "T"
-    val identical = compareCols
-      .map(x => col(s"__new_$x") <=> col(s"__base_$x"))
-      .reduce(_ && _)
-
+    val cols = col(key) +: col("outcome") +: col("is_deleted") +:
+      compareCols.flatMap(x => Seq(col(s"__base_$x"), col(s"__new_$x")))
     // 1: in-base rows (change present or not) — base never shuffles
-    val inBaseMerged = b.join(broadcast(c), Seq(key), "left")
-      .withColumn("outcome",
-        when(op.isNull && wasDeleted, "unchanged_deleted")
-        .when(op.isNull, "unchanged")
-        .when(wasDeleted && op === "A", "add_but_deleted_and_changed")
-        .when(wasDeleted && op === "C", "change_but_deleted_and_ignored")
-        .when(wasDeleted && op === "D", "delete_but_deleted_and_ignored")
-        .when(op === "A" && identical, "add_but_already_identical_and_ignored")
-        .when(op === "A", "add_but_changed")
-        .when(op === "C" && identical, "change_but_already_identical_and_ignored")
-        .when(op === "C", "change_and_changed")
-        .when(op === "D" && identical, "delete_and_deleted")
-        .when(op === "D", "delete_but_not_identical_and_changed_and_deleted")
-        .otherwise("invalid_op_ignored"))
+    val inBaseRows = b.join(broadcast(c), Seq(key), "left")
+      .withColumn("outcome", outcome(lit(true), compareCols))
     // 2: matched change keys — output bounded by |changes|
     val matched = b.select(col(key))
       .join(broadcast(c.select(col(key))), Seq(key), "left_semi")
-    // 3: change rows whose key is NOT in base
-    val missing = c.join(broadcast(matched), Seq(key), "left_anti")
-      .withColumn("outcome",
-        when(op === "A", "add_and_added")
-        .when(op === "C", "change_but_missing_and_added")
-        .when(op === "D", "delete_but_missing_and_ignored")
-        .otherwise("invalid_op_missing_and_ignored"))
-      .withColumn("is_deleted", lit(null).cast("string"))
-    val missingAligned = compareCols.foldLeft(missing)((df, x) =>
-      df.withColumn(s"__base_$x", lit(null).cast(df.schema(s"__new_$x").dataType)))
-
-    val takes = col("outcome").isin(takesNew: _*)
-    val all = inBaseMerged.select(
-      (col(key) +: col("outcome") +: col("is_deleted") +:
-        compareCols.flatMap(x => Seq(col(s"__base_$x"), col(s"__new_$x")))): _*)
-      .unionByName(missingAligned.select(
-        (col(key) +: col("outcome") +: col("is_deleted") +:
-          compareCols.flatMap(x => Seq(col(s"__base_$x"), col(s"__new_$x")))): _*))
-    val withFinal = compareCols.foldLeft(all)((df, x) =>
-      df.withColumn(x, when(takes, col(s"__new_$x")).otherwise(col(s"__base_$x"))))
-      .withColumn("final_deleted",
-        when(col("outcome").isin(endsDeleted: _*), "T")
-        .when(col("outcome") === "add_but_deleted_and_changed", "F")
-        .when(col("is_deleted") === "T", "T").otherwise("F"))
-    withFinal.select(col(key) +: compareCols.map(col) :+
-      col("final_deleted") :+ col("outcome"): _*)
-      .withColumnRenamed("final_deleted", "is_deleted")
+    // 3: change rows whose key is NOT in base, with the base-side
+    // columns null so the shared matrix resolves
+    val missing = compareCols.foldLeft(
+        c.join(broadcast(matched), Seq(key), "left_anti")
+          .withColumn("is_deleted", lit(null).cast("string")))((df, x) =>
+        df.withColumn(s"__base_$x", lit(null).cast(df.schema(s"__new_$x").dataType)))
+      .withColumn("outcome", outcome(lit(false), compareCols))
+    finish(inBaseRows.select(cols: _*).unionByName(missing.select(cols: _*)),
+      key, compareCols)
   }
 
   /** Fold a sequence of monthly update files over a base snapshot in

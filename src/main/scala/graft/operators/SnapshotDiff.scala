@@ -113,8 +113,7 @@ object SnapshotDiff {
     * additive (exact in both engines); the double cast happens once
     * at the edge. */
   def incrAggResult(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.util.Scratch.dir("incr_agg_q")
-    val table = publishTimeline(spark, dir, tmp)
+    val table = publishTimeline(spark, dir)
     val v2 = Sinks.readSnapshotAt(spark, table, version = 2L)
     val v3 = Sinks.readSnapshotAt(spark, table, version = 3L)
     val feed = diffOf(v2, v3, key = "o_orderkey",
@@ -132,8 +131,7 @@ object SnapshotDiff {
     * diff. A feed subscriber that maintains a replica this way holds
     * the same state as a full re-read, at change-feed cost. */
   def cdfApplyResult(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.util.Scratch.dir("cdf_apply_q")
-    val table = publishTimeline(spark, dir, tmp)
+    val table = publishTimeline(spark, dir)
     val v2 = Sinks.readSnapshotAt(spark, table, version = 2L)
     val v3 = Sinks.readSnapshotAt(spark, table, version = 3L)
     val feed = diffOf(v2, v3, key = "o_orderkey", compareCols = Seq("price", "is_deleted"))
@@ -143,27 +141,18 @@ object SnapshotDiff {
       .orderBy("o_orderkey")
   }
 
-  /** One timeline per source dir per JVM: the fixture is
-    * deterministic (same three publishes from the same inputs), so
-    * the four registered queries that read it — time travel, diff,
-    * CDF apply, incremental aggregate — share one build instead of
-    * re-publishing it each (and, under the benchmark's median-of-3,
-    * nine times over). The timed path is then what each query
-    * actually claims: the version reads and the change-feed work,
-    * not the shared fixture setup. */
-  private val timelines =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def publishTimeline(spark: SparkSession, dir: String, tmp: String): String =
-    timelines.computeIfAbsent(dir, _ => buildTimeline(spark, dir, tmp))
+  /** The timeline the four read-only queries share — time travel,
+    * diff, CDF apply, incremental aggregate. */
+  private def publishTimeline(spark: SparkSession, dir: String): String =
+    graft.util.Scratch.fixture("timeline", dir)(buildTimeline(spark, dir, _)) + "/table"
 
   /** Publish the three-version CDC timeline into a scratch table:
     * v1 = base snapshot, v2 = month-1 merge applied, v3 = month-2
     * merge applied against v2 — the batch twin of the streaming
     * multi-batch query's lifecycle, shared by both registered
-    * queries below. Returns the table path (live version = 3; v2
-    * retained by the default window, v1 pruned). */
-  private def buildTimeline(spark: SparkSession, dir: String, tmp: String): String = {
+    * queries below, at `<tmp>/table` (live version = 3; v2 retained
+    * by the default window, v1 pruned). */
+  private def buildTimeline(spark: SparkSession, dir: String, tmp: String): Unit = {
     val table = s"$tmp/table"
     val dates = Tables.orders(spark, dir)
       .select(col("o_orderkey"), to_date(col("o_orderdate")).as("transaction_date"))
@@ -180,7 +169,6 @@ object SnapshotDiff {
     }
     applyMonth(Cdc.changeSet(spark, dir))
     applyMonth(Cdc.changeSet2(spark, dir))
-    table
   }
 
   /** Registered `q_time_travel`: after the month-2 publish, read the
@@ -190,8 +178,7 @@ object SnapshotDiff {
     * Pins that retention keeps committed history bit-exact and that
     * the version-pinned read path resolves the right directory. */
   def timeTravelResult(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.util.Scratch.dir("time_travel_q")
-    val table = publishTimeline(spark, dir, tmp)
+    val table = publishTimeline(spark, dir)
     Sinks.readSnapshotAt(spark, table, version = 2L)
       .select(col("o_orderkey"), col("price").cast(DoubleType).as("price"),
         col("transaction_date"), col("is_deleted"))
@@ -206,22 +193,19 @@ object SnapshotDiff {
     * newest-commit-at-or-before rule). Answers the SAME DuckDB oracle
     * as `q_time_travel`: two resolution paths, one pinned history. */
   def timeTravelTsResult(spark: SparkSession, dir: String): DataFrame = {
-    // OWN cached fixture, never the shared timeline: this query PLANTS
-    // commit times, and the fixture rule is that mutators get a fresh
-    // (here: private, built-once) copy — re-planting the shared
-    // timeline on every invocation would race the other four queries
-    // reading it. Times are planted ONCE inside computeIfAbsent (in the
-    // PAST, so later real commits sort after them) and the read moment
-    // derives from the planted values, not a fresh now().
-    val (table, readTs) = tsTimelines.computeIfAbsent(dir, _ => {
-      val t = buildTimeline(spark, dir, graft.util.Scratch.dir("time_travel_ts_q"))
+    // its own timeline, never the shared one: planting commit times
+    // mutates the table. Times are planted in the PAST (later real
+    // commits sort after them), a minute apart on the two retained
+    // versions (the default window pruned v1)
+    val table = graft.util.Scratch.fixture("time_travel_ts_q", dir) { f =>
+      buildTimeline(spark, dir, f)
       val t0 = System.currentTimeMillis()
-      // the timeline's default window retains v2 and v3 only (v1
-      // pruned) — plant the two retained commit times a minute apart
       Seq(2L, 3L).foreach(v =>
-        graft.sources.Sinks.plantCommitTime(spark, t, v, t0 - (4L - v) * 60000L))
-      (t, t0 - 90000L) // strictly between the planted m2 and m3 moments
-    })
+        Sinks.plantCommitTime(spark, s"$f/table", v, t0 - (4L - v) * 60000L))
+    } + "/table"
+    // a moment strictly between the planted month-1 and month-2 commits
+    val readTs = (Sinks.commitTimeMs(spark, table, 2L) +
+      Sinks.commitTimeMs(spark, table, 3L)) / 2
     spark.read.format("graft-table")
       .option("timestampAsOf", readTs.toString)
       .load(table)
@@ -230,9 +214,6 @@ object SnapshotDiff {
       .orderBy("o_orderkey")
   }
 
-  private val tsTimelines =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-
   /** Registered `q_snapshot_diff`: the change feed v2 → v3, i.e.
     * exactly what month 2 did to the table — re-added keys surface as
     * `insert`, price bumps and soft-delete flips as `update` (soft
@@ -240,8 +221,7 @@ object SnapshotDiff {
     * exists for tables that hard-delete). Hash-checked against a
     * DuckDB full-outer diff of the two chained replay states. */
   def snapshotDiffResult(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.util.Scratch.dir("snapshot_diff_q")
-    val table = publishTimeline(spark, dir, tmp)
+    val table = publishTimeline(spark, dir)
     diffOf(
         Sinks.readSnapshotAt(spark, table, version = 2L),
         Sinks.readSnapshotAt(spark, table, version = 3L),
@@ -277,9 +257,6 @@ object SnapshotDiff {
       key, compare)
   }
 
-  private val evolvedDiffFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Registered `q_snapshot_diff_evolved`: the id-resolved change feed
     * across a version gap that contains BOTH a rename and a DV chain —
     * v1 publishes (k, price, day) evolved; a deletion vector drops
@@ -290,8 +267,8 @@ object SnapshotDiff {
     * `orders` directly, so one spurious rename-induced row breaks the
     * match. */
   def snapshotDiffEvolvedResult(spark: SparkSession, dir: String): DataFrame = {
-    val table = evolvedDiffFixtures.computeIfAbsent(dir, _ => {
-      val t = graft.util.Scratch.dir("snapshot_diff_evo_q") + "/table"
+    val table = graft.util.Scratch.fixture("snapshot_diff_evo_q", dir) { f =>
+      val t = s"$f/table"
       val base = Tables.orders(spark, dir)
         .select(col("o_orderkey").as("k"),
           col("o_totalprice").cast("decimal(18,2)").as("price"),
@@ -313,8 +290,7 @@ object SnapshotDiff {
       graft.sources.SchemaEvolution.publishEvolved(
         renamedBumped.unionByName(inserts), "day", t,
         renamedFrom = Map("amount" -> "price"), retainVersions = 10)
-      t
-    })
+    } + "/table"
     diffVersionsAs(spark, table, fromVersion = 1L,
       toVersion = Sinks.currentVersion(spark, table).get, key = "k")
       .select(col("k"), col("change_type"),

@@ -592,8 +592,7 @@ object Branches {
     * replayed commit → census. All three censuses are per-bucket
     * (count, exact decimal price sum surfaced as DOUBLE, 60-bit
     * key|status XOR) — every cell derivable from `orders` by modular
-    * arithmetic without seeing a snapshot. Fixture builds once per
-    * JVM (the group-publish precedent); each census is taken while
+    * arithmetic without seeing a snapshot. Each census is taken while
     * its state is live and PERSISTED (the next phase advances the
     * head past it). */
   def branchMergeResult(spark: SparkSession, dir: String): DataFrame = {
@@ -607,8 +606,7 @@ object Branches {
         expr("bit_xor(h)").as("row_xor"))
       .select(lit(phase).as("phase"), col("bucket"), col("n_rows"),
         col("sum_price"), col("row_xor"))
-    val fixture = branchFixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("branch_fx")
+    val fixture = graft.util.Scratch.fixture("branch_fx", dir) { f =>
       val tbl = s"$f/tbl"
       val base = Tables.orders(spark, dir).select(
         col("o_orderkey").cast("long").as("o_orderkey"),
@@ -672,16 +670,12 @@ object Branches {
         Seq("odate", "status", "price"), "odate", retainVersions = 6)
       census(Sinks.readSnapshot(spark, tbl), "rebased")
         .coalesce(1).write.parquet(s"$f/rebased")
-      f
-    })
+    }
     spark.read.parquet(s"$fixture/merged")
       .unionByName(spark.read.parquet(s"$fixture/ff"))
       .unionByName(spark.read.parquet(s"$fixture/rebased"))
       .orderBy("phase", "bucket")
   }
-
-  private val branchFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Registered `q_branch_mor` (hash-oracled): the O(changes) staging
     * workflow end-to-end against one closed-form `orders` oracle —
@@ -692,8 +686,7 @@ object Branches {
     * history, zero rewrite) → census of the adopted intermediate
     * delete link (provably real history) and of the live merged head.
     * Per-bucket count, exact price sum as DOUBLE, 60-bit key|status
-    * XOR — every cell modular arithmetic over `orders`. Fixture once
-    * per JVM; the query times the merged reads. */
+    * XOR — every cell modular arithmetic over `orders`. */
   def branchMorResult(spark: SparkSession, dir: String): DataFrame = {
     def census(st: DataFrame, phase: String): DataFrame = st
       .select((col("o_orderkey") % 10).cast("long").as("bucket"), col("price"),
@@ -705,8 +698,7 @@ object Branches {
         expr("bit_xor(h)").as("row_xor"))
       .select(lit(phase).as("phase"), col("bucket"), col("n_rows"),
         col("sum_price"), col("row_xor"))
-    val fixture = morFixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("branch_mor_fx")
+    val fixture = graft.util.Scratch.fixture("branch_mor_fx", dir) { f =>
       val tbl = s"$f/tbl"
       val base = Tables.orders(spark, dir).select(
         col("o_orderkey").cast("long").as("o_orderkey"),
@@ -735,13 +727,9 @@ object Branches {
       census(DeletionVectors.readMergedAt(spark, tbl, 2L), "link_delete")
         .unionByName(census(DeletionVectors.readMerged(spark, tbl), "live"))
         .coalesce(1).write.parquet(s"$f/census")
-      f
-    })
+    }
     spark.read.parquet(s"$fixture/census").orderBy("phase", "bucket")
   }
-
-  private val morFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Delete the branch ref and garbage-collect its UNMERGED version
     * dirs: versions the branch marked that no `_manifests` marker ever

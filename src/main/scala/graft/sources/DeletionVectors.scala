@@ -401,12 +401,7 @@ object DeletionVectors {
 
   // — registered binding ———————————————————————————————————————————
 
-  // fixture built once per JVM (the timeline idiom): the timed path
-  // is the chain-resolved merged READ — the novel plan — not the
-  // shared publish setup
-  private val fixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def buildFixture(spark: SparkSession, dir: String, tmp: String): String = {
+  private def buildFixture(spark: SparkSession, dir: String, tmp: String): Unit = {
     val table = s"$tmp/table"
     val base = baseOf(spark, dir)
     Sinks.publishSnapshot(base, "transaction_date", table, colocateMonths = true)
@@ -414,7 +409,6 @@ object DeletionVectors {
       base.filter(col("o_orderkey") % 7 === 0).select("o_orderkey"), "o_orderkey")
     publishDeletes(spark, table,
       base.filter(col("o_custkey") % 5 === 0).select("o_orderkey"), "o_orderkey")
-    table
   }
 
   private def baseOf(spark: SparkSession, dir: String): DataFrame =
@@ -427,8 +421,7 @@ object DeletionVectors {
     * merged — the broadcast-anti-join merge-on-read path, hash-checked
     * against the plain filtered table. */
   def dvMergedResult(spark: SparkSession, dir: String): DataFrame = {
-    val table = fixtures.computeIfAbsent(dir,
-      _ => buildFixture(spark, dir, graft.util.Scratch.dir("dv_q")))
+    val table = graft.util.Scratch.fixture("dv_q", dir)(buildFixture(spark, dir, _)) + "/table"
     // project away the txn_month partition dir column the store adds
     readMerged(spark, table)
       .select("o_orderkey", "o_custkey", "price", "transaction_date")
@@ -440,8 +433,6 @@ object DeletionVectors {
       |  CAST(o_orderdate AS DATE) AS transaction_date
       |FROM orders WHERE o_orderkey % 7 <> 0 AND o_custkey % 5 <> 0
       |ORDER BY o_orderkey""".stripMargin
-
-  private val rtbfFixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Registered `q_rtbf_purge` — the RIGHT-TO-BE-FORGOTTEN
     * composition as a query surface (DeletionVectorsSpec's
@@ -456,8 +447,8 @@ object DeletionVectors {
     * removed EXACTLY the subjects' rows and left every other row
     * byte-identical. */
   def rtbfPurgeResult(spark: SparkSession, dir: String): DataFrame = {
-    val table = rtbfFixtures.computeIfAbsent(dir, _ => {
-      val t = graft.util.Scratch.dir("rtbf_q") + "/table"
+    val table = graft.util.Scratch.fixture("rtbf_q", dir) { f =>
+      val t = s"$f/table"
       val ev = Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           to_date(col("ts")).as("day"))
@@ -465,8 +456,7 @@ object DeletionVectors {
       val subjects = readMerged(spark, t)
         .filter(col("user_id") % 97 === 0).select("event_id")
       publishDeletes(spark, t, subjects, "event_id")
-      t
-    })
+    } + "/table"
     readMerged(spark, table)
       .withColumn("__h",
         graft.operators.Reconcile.xorHash60(col("event_id").cast("string")))
@@ -482,15 +472,13 @@ object DeletionVectors {
       |FROM events WHERE user_id % 97 <> 0
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  private val morFixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Two chained MoR upserts: commit A bumps every 9th key by 10,
     * inserts an offset twin of every 17th key at half price, and
     * hard-deletes every 13th (non-updated) key; commit B re-bumps
     * every 18th key by 25 (superseding A's image) and deletes every
     * other A-insert. Exercises update-over-update and
     * delete-of-earlier-insert across links. */
-  private def buildMorFixture(spark: SparkSession, dir: String, tmp: String): String = {
+  private def buildMorFixture(spark: SparkSession, dir: String, tmp: String): Unit = {
     val table = s"$tmp/table"
     val base = baseOf(spark, dir)
     val k = col("o_orderkey")
@@ -506,15 +494,13 @@ object DeletionVectors {
       .withColumn("price", col("price") + 25.0)
     publishUpsert(spark, table, updB, "o_orderkey",
       base.filter(k % 34 === 0).select((k + 10000000L).as("o_orderkey")))
-    table
   }
 
   /** Registered `q_mor_upsert`: the two-link upsert chain read merged
     * — base never rewritten, later links superseding earlier images —
     * hash-checked against the directly-computed final state. */
   def morUpsertResult(spark: SparkSession, dir: String): DataFrame = {
-    val table = morFixtures.computeIfAbsent(dir,
-      _ => buildMorFixture(spark, dir, graft.util.Scratch.dir("mor_q")))
+    val table = graft.util.Scratch.fixture("mor_q", dir)(buildMorFixture(spark, dir, _)) + "/table"
     readMerged(spark, table)
       .select("o_orderkey", "o_custkey", "price", "transaction_date")
       .orderBy("o_orderkey")

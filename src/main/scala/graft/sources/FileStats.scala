@@ -542,16 +542,6 @@ object FileStats {
         r.hi.map(h => col(r.column) <= lit(h)).toSeq
     }.reduceOption(_ && _).getOrElse(lit(true))
 
-  /** Registered driver query: publish the orders table as a snapshot
-    * version carrying per-file stats on (o_custkey, o_totalprice) —
-    * range-clustered on custkey so file intervals are narrow — then
-    * answer a 2-D box filter through the manifest-pruned scan. The
-    * whole publish→manifest→pruned-read lifecycle runs under the
-    * driver's hash check against a plain filter oracle: skipping must
-    * never change results. The PRUNING property (files actually
-    * dropped from the scan) is spec-measured in ScaleSpec. */
-  private val aggFixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Registered driver query (`q_meta_agg`): publish orders as a
     * snapshot version carrying per-file stats (incl. a deliberately
     * nullable column), then answer a whole-table
@@ -560,22 +550,9 @@ object FileStats {
     * committed manifest, no data scan (plan shape pinned in
     * MetaAggregateSpec). Hash-checked against a plain DuckDB
     * aggregate over the same source: serving from metadata must never
-    * change results. Fixture once per JVM; the query times the
-    * metadata-only reads. */
+    * change results. */
   def metaAggregate(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{expr, to_date}
-    val tmp = aggFixtures.computeIfAbsent(dir, _ => {
-      val t = graft.util.Scratch.dir("metaagg_q")
-      val df = Tables.orders(spark, dir)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-          col("o_totalprice"), to_date(col("o_orderdate")).as("o_orderdate"),
-          expr("CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_orderpriority END")
-            .as("o_prio_n"))
-      Sinks.publishSnapshot(df, "o_orderdate", t,
-        statsCols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
-          "o_totalprice", "o_orderdate", "o_prio_n"))
-      t
-    })
+    val tmp = metaAggFixture(spark, dir)
     spark.sql(
       s"""SELECT count(*) AS n_rows,
          |       count(o_prio_n) AS n_prio,
@@ -587,6 +564,20 @@ object FileStats {
          |FROM graft.`$tmp`""".stripMargin)
   }
 
+  /** The stats-carrying orders snapshot both metadata aggregates read. */
+  private def metaAggFixture(spark: SparkSession, dir: String): String =
+    graft.util.Scratch.fixture("metaagg_q", dir) { t =>
+      import org.apache.spark.sql.functions.{expr, to_date}
+      val df = Tables.orders(spark, dir)
+        .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
+          col("o_totalprice"), to_date(col("o_orderdate")).as("o_orderdate"),
+          expr("CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_orderpriority END")
+            .as("o_prio_n"))
+      Sinks.publishSnapshot(df, "o_orderdate", t,
+        statsCols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
+          "o_totalprice", "o_orderdate", "o_prio_n"))
+    }
+
   /** Registered driver query (`q_meta_agg_month`): the PARTITION-GRAIN
     * metadata aggregate — `GROUP BY txn_month` over the same published
     * store, read path-mode (the partition column is visible there),
@@ -596,8 +587,7 @@ object FileStats {
     * Hash-checked against DuckDB's plain month-grouped aggregate over
     * the source parquet. Shares [[metaAggregate]]'s fixture. */
   def metaAggregateMonthly(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    metaAggregate(spark, dir) // ensure the fixture exists
-    val tmp = aggFixtures.get(dir)
+    val tmp = metaAggFixture(spark, dir)
     spark.read.format("graft-table").load(tmp).createOrReplaceTempView("meta_agg_m")
     spark.sql(
       """SELECT txn_month, count(*) AS n_rows, count(o_prio_n) AS n_prio,
@@ -620,21 +610,26 @@ object FileStats {
     * nothing scales with data. */
   def partitionsCensus(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.to_date
-    val tmp = partFixtures.computeIfAbsent(dir, _ => {
-      val t = graft.util.Scratch.dir("partcensus_q")
+    val tmp = graft.util.Scratch.fixture("partcensus_q", dir) { t =>
       val df = Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
           to_date(col("o_orderdate")).as("o_orderdate"))
       Sinks.publishSnapshot(df, "o_orderdate", t,
         colocateMonths = true, statsCols = Seq("o_orderkey"))
-      t
-    })
+    }
     spark.sql(s"CALL graft.system.partitions(table => '$tmp')")
       .select("txn_month", "file_count", "row_count")
       .orderBy("txn_month")
   }
-  private val partFixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  /** Registered driver query: publish the orders table as a snapshot
+    * version carrying per-file stats on (o_custkey, o_totalprice) —
+    * range-clustered on custkey so file intervals are narrow — then
+    * answer a 2-D box filter through the manifest-pruned scan. The
+    * whole publish→manifest→pruned-read lifecycle runs under the
+    * driver's hash check against a plain filter oracle: skipping must
+    * never change results. The PRUNING property (files actually
+    * dropped from the scan) is spec-measured in ScaleSpec. */
   def statsSkipScan(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{to_date, lit => flit}
     val tmp = graft.util.Scratch.dir("statskip_q")

@@ -257,10 +257,32 @@ class GraftFeedSource(spark: SparkSession, params: Map[String, String])
 }
 
 object GraftFeedSource {
-  private val fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val evolvedFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The three-commit lifecycle at `t`: v1 class-0 baseline publish,
+    * v2 MoR upsert link (class-20 price bumps + class-7 inserts), v3 DV
+    * delete link (class-30) — the shared source of the change-feed,
+    * feed-view, mirror and restore queries. */
+  private[graft] def publishLifecycle(spark: SparkSession, dir: String, t: String): Unit = {
+    val base = Tables.orders(spark, dir).select(
+      col("o_orderkey").cast("long").as("o_orderkey"),
+      col("o_orderdate").cast("date").as("odate"),
+      col("o_totalprice").cast("decimal(18,2)").as("price"))
+    Sinks.publishSnapshot(base.filter(col("o_orderkey") % 10 === 0), "odate", t,
+      retainVersions = 100)
+    val updates = base.filter(col("o_orderkey") % 20 === 0)
+      .withColumn("price",
+        expr("CAST(price + CAST('5.00' AS DECIMAL(3,2)) AS DECIMAL(18,2))"))
+    DeletionVectors.publishUpsert(spark, t,
+      updates.unionByName(base.filter(col("o_orderkey") % 10 === 7)),
+      "o_orderkey", updates.select("o_orderkey").limit(0), validate = false)
+    DeletionVectors.publishDeletes(spark, t,
+      base.filter(col("o_orderkey") % 30 === 0).select("o_orderkey"), "o_orderkey")
+  }
+
+  /** [[publishLifecycle]]'s store, read-only: the change-feed readers
+    * (stream, batch, mirror) share it. */
+  private[graft] def lifecycleStore(spark: SparkSession, dir: String): String =
+    graft.util.Scratch.fixture("feed_lifecycle", dir)(f =>
+      publishLifecycle(spark, dir, s"$f/t")) + "/t"
 
   /** Registered `q_table_feed` (hash-oracled): tail a three-commit
     * history — class-0 baseline publish, one MoR upsert link (class-20
@@ -269,27 +291,9 @@ object GraftFeedSource {
     * census (version, change_type) → row count / key XOR / price sum
     * against closed-form DuckDB over `orders`. The ledger is
     * batching-independent (every row carries `_commit_version`), so
-    * however the trigger slices the range the hash is one truth. The
-    * store builds once per JVM; the DRAIN is the timed surface. */
+    * however the trigger slices the range the hash is one truth. */
   def tableFeedResult(spark: SparkSession, dir: String): DataFrame = {
-    val t = fixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("table_feed") + "/t"
-      val base = Tables.orders(spark, dir).select(
-        col("o_orderkey").cast("long").as("o_orderkey"),
-        col("o_orderdate").cast("date").as("odate"),
-        col("o_totalprice").cast("decimal(18,2)").as("price"))
-      Sinks.publishSnapshot(base.filter(col("o_orderkey") % 10 === 0), "odate", f,
-        retainVersions = 100)
-      val updates = base.filter(col("o_orderkey") % 20 === 0)
-        .withColumn("price",
-          expr("CAST(price + CAST('5.00' AS DECIMAL(3,2)) AS DECIMAL(18,2))"))
-      val inserts = base.filter(col("o_orderkey") % 10 === 7)
-      DeletionVectors.publishUpsert(spark, f, updates.unionByName(inserts),
-        "o_orderkey", updates.select("o_orderkey").limit(0), validate = false)
-      DeletionVectors.publishDeletes(spark, f,
-        base.filter(col("o_orderkey") % 30 === 0).select("o_orderkey"), "o_orderkey")
-      f
-    })
+    val t = lifecycleStore(spark, dir)
     val out = graft.util.Scratch.dir("table_feed_out")
     spark.readStream.format("graft-table").option("startingVersion", "1").load(t)
       .writeStream.option("checkpointLocation", s"$out/ckpt")
@@ -311,9 +315,6 @@ object GraftFeedSource {
       .orderBy("commit_version", "change_type")
   }
 
-  private val batchFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Registered `q_table_changes` (hash-oracled): the BATCH change-feed
     * read — Delta CDF's `spark.read.option("readChangeFeed", "true")`
     * spelling — over the same three-commit lifecycle as `q_table_feed`
@@ -326,27 +327,9 @@ object GraftFeedSource {
     * (no trigger machinery, no checkpoint), so this is also the cheap
     * backfill path: a consumer bootstrapping a derived table reads
     * history once in batch, then tails the stream from the boundary
-    * version. Fixture once per JVM; the query times the two range
-    * reads. */
+    * version. */
   def tableChangesResult(spark: SparkSession, dir: String): DataFrame = {
-    val t = batchFixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("table_changes") + "/t"
-      val base = Tables.orders(spark, dir).select(
-        col("o_orderkey").cast("long").as("o_orderkey"),
-        col("o_orderdate").cast("date").as("odate"),
-        col("o_totalprice").cast("decimal(18,2)").as("price"))
-      Sinks.publishSnapshot(base.filter(col("o_orderkey") % 10 === 0), "odate", f,
-        retainVersions = 100)
-      val updates = base.filter(col("o_orderkey") % 20 === 0)
-        .withColumn("price",
-          expr("CAST(price + CAST('5.00' AS DECIMAL(3,2)) AS DECIMAL(18,2))"))
-      val inserts = base.filter(col("o_orderkey") % 10 === 7)
-      DeletionVectors.publishUpsert(spark, f, updates.unionByName(inserts),
-        "o_orderkey", updates.select("o_orderkey").limit(0), validate = false)
-      DeletionVectors.publishDeletes(spark, f,
-        base.filter(col("o_orderkey") % 30 === 0).select("o_orderkey"), "o_orderkey")
-      f
-    })
+    val t = lifecycleStore(spark, dir)
     def census(phase: String, df: DataFrame): DataFrame =
       df.withColumn("h",
           graft.operators.Reconcile.xorHash60(col("o_orderkey").cast("string")))
@@ -381,8 +364,8 @@ object GraftFeedSource {
     * DuckDB oracle over `orders`; batching-independent like
     * `q_table_feed`. */
   def tableFeedEvolvedResult(spark: SparkSession, dir: String): DataFrame = {
-    val t = evolvedFixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("table_feed_evo") + "/t"
+    val t = graft.util.Scratch.fixture("table_feed_evo", dir) { fx =>
+      val f = s"$fx/t"
       val base = Tables.orders(spark, dir).select(
         col("o_orderkey").cast("long").as("o_orderkey"),
         col("o_orderdate").cast("date").as("odate"),
@@ -404,8 +387,7 @@ object GraftFeedSource {
         .withColumnRenamed("price", "amount")
       SchemaEvolution.publishEvolved(merged, "odate", f,
         renamedFrom = Map("amount" -> "price"), retainVersions = 100)
-      f
-    })
+    } + "/t"
     val out = graft.util.Scratch.dir("table_feed_evo_out")
     // two drains of the same evolved history: plain change shapes, and
     // PREIMAGES mode (Delta-CDF shapes — update_preimage/postimage,

@@ -91,29 +91,22 @@ class GraftStreamSink(spark: SparkSession, params: Map[String, String],
 }
 
 object GraftStreamSink {
-  private val fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Registered `q_stream_sink` (hash-oracled): continuous ingestion
     * through the native streaming sink — a three-file parquet drop of
     * the class-0 orders streamed file-per-trigger into a FRESH store
     * (`maxFilesPerTrigger = 1` → bootstrap publish + two MoR links),
     * then censused: the merged state must hold every input row exactly
     * once, and the commit-kind ledger must show 1 data version + 2
-    * upsert links — closed-form DuckDB over `orders` + VALUES. The
-    * input fixture builds once per JVM; the STREAM is what each
-    * invocation times. */
+    * upsert links — closed-form DuckDB over `orders` + VALUES. */
   def streamSinkResult(spark: SparkSession, dir: String): DataFrame = {
-    val in = fixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("sink_in") + "/files"
+    val in = graft.util.Scratch.fixture("sink_in", dir) { f =>
       Tables.orders(spark, dir)
         .filter(col("o_orderkey") % 10 === 0)
         .select(col("o_orderkey").cast("long").as("o_orderkey"),
           col("o_orderdate").cast("date").as("odate"),
           col("o_totalprice").cast("decimal(18,2)").as("price"))
-        .repartition(3).write.parquet(f)
-      f
-    })
+        .repartition(3).write.parquet(s"$f/files")
+    } + "/files"
     val scratch = graft.util.Scratch.dir("sink_q")
     val tbl = s"$scratch/t"
     val schema = spark.read.parquet(in).schema

@@ -519,9 +519,6 @@ object GraftTable {
 
   // ——— registered surface ————————————————————————————————————————————
 
-  private val writeFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Registered `q_dsv2_write` (hash-oracled): the WRITE lifecycle of
     * the connector + catalog, end to end against one closed-form
     * oracle over `orders`. Phase 1 BOOTSTRAPS the store through the
@@ -532,8 +529,7 @@ object GraftTable {
     * CHAIN-MERGED catalog read; phase 3 `INSERT OVERWRITE`s down to
     * the `k % 8 = 0` class (full replace, plain head again) and
     * censuses through the PROVIDER read path. Every census is a
-    * closed-form row count + 60-bit key XOR. Fixture once per JVM;
-    * the query times the three census reads. */
+    * closed-form row count + 60-bit key XOR. */
   def sqlWriteResult(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     def census(phase: String, df: DataFrame): DataFrame =
@@ -542,8 +538,7 @@ object GraftTable {
         .agg(org.apache.spark.sql.functions.count(lit(1)).as("n_rows"),
           expr("bit_xor(h)").as("key_xor"))
         .select(lit(phase).as("phase"), col("n_rows"), col("key_xor"))
-    val fixture = writeFixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("dsv2_write")
+    val fixture = graft.util.Scratch.fixture("dsv2_write", dir) { f =>
       val t = s"$f/t"
       val orders = Tables.orders(spark, dir)
         .select(col("o_orderkey").cast("long").as("o_orderkey"),
@@ -569,16 +564,12 @@ object GraftTable {
            |FROM dsv2w_orders WHERE o_orderkey % 8 = 0""".stripMargin)
       census("overwritten", spark.read.format("graft-table").load(t))
         .coalesce(1).write.parquet(s"$f/c3")
-      f
-    })
+    }
     spark.read.parquet(s"$fixture/c1")
       .unionByName(spark.read.parquet(s"$fixture/c2"))
       .unionByName(spark.read.parquet(s"$fixture/c3"))
       .orderBy("phase")
   }
-
-  private val ctasFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Registered `q_ctas` (hash-oracled): the ATOMIC CTAS/RTAS DDL
     * surface ([[GraftCatalog]]'s StagingTableCatalog) — `CREATE TABLE
@@ -588,8 +579,7 @@ object GraftTable {
     * version 2 of the SAME history, and a `VERSION AS OF 1` read
     * proves the replace appended history instead of rewriting it.
     * Census per phase: row count + 60-bit key XOR + exact price sum
-    * vs closed-form DuckDB over `orders`. Fixture once per JVM; the
-    * query times the three censuses. */
+    * vs closed-form DuckDB over `orders`. */
   def ctasResult(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     def census(phase: String, df: DataFrame): DataFrame =
@@ -598,8 +588,7 @@ object GraftTable {
         .agg(count(lit(1)).as("n_rows"), expr("bit_xor(h)").as("key_xor"),
           sum(col("price")).cast("double").as("sum_price"))
         .select(lit(phase).as("phase"), col("n_rows"), col("key_xor"), col("sum_price"))
-    val fixture = ctasFixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("ctas")
+    val fixture = graft.util.Scratch.fixture("ctas", dir) { f =>
       val t = s"$f/t"
       Tables.orders(spark, dir)
         .select(col("o_orderkey").cast("long").as("o_orderkey"),
@@ -620,16 +609,12 @@ object GraftTable {
         .coalesce(1).write.parquet(s"$f/c2")
       census("history", spark.sql(s"SELECT * FROM graft.`$t` VERSION AS OF 1"))
         .coalesce(1).write.parquet(s"$f/c3")
-      f
-    })
+    }
     spark.read.parquet(s"$fixture/c1")
       .unionByName(spark.read.parquet(s"$fixture/c2"))
       .unionByName(spark.read.parquet(s"$fixture/c3"))
       .orderBy("phase")
   }
-
-  private val replaceFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Registered `q_replace_where` (hash-oracled): the SCOPED overwrite
     * — Delta's `replaceWhere` — as the lakehouse spelling of the
@@ -645,8 +630,7 @@ object GraftTable {
     * WHERE`, resolving the chain head) with the `k % 8 = 6` class at
     * doubled prices. Census per phase: row count, 60-bit key XOR,
     * exact price sum as DOUBLE — the untouched 1995-96 middle region
-    * must ride through both replacements cell-for-cell. Fixture once
-    * per JVM; the query times the three censuses. */
+    * must ride through both replacements cell-for-cell. */
   def replaceWhereResult(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     def census(phase: String, df: DataFrame): DataFrame =
@@ -655,8 +639,7 @@ object GraftTable {
         .agg(count(lit(1)).as("n_rows"), expr("bit_xor(h)").as("key_xor"),
           sum(col("price")).cast("double").as("sum_price"))
         .select(lit(phase).as("phase"), col("n_rows"), col("key_xor"), col("sum_price"))
-    val fixture = replaceFixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("replace_where")
+    val fixture = graft.util.Scratch.fixture("replace_where", dir) { f =>
       val t = s"$f/t"
       val orders = Tables.orders(spark, dir)
         .select(col("o_orderkey").cast("long").as("o_orderkey"),
@@ -684,16 +667,12 @@ object GraftTable {
            |""".stripMargin)
       census("sql_replaced", spark.sql(s"SELECT * FROM graft.`$t`"))
         .coalesce(1).write.parquet(s"$f/c3")
-      f
-    })
+    }
     spark.read.parquet(s"$fixture/c1")
       .unionByName(spark.read.parquet(s"$fixture/c2"))
       .unionByName(spark.read.parquet(s"$fixture/c3"))
       .orderBy("phase")
   }
-
-  private val mergeFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Registered `q_merge_sql` (hash-oracled): the reference's CDC
     * merge decision matrix as PLAIN SQL against the lakehouse —
@@ -708,12 +687,10 @@ object GraftTable {
     * the 60-bit key|status XOR against closed-form DuckDB arithmetic
     * over `orders` — proving the SQL row-level surface, the delta
     * writers, the MoR commit path and the chain-merged scan agree
-    * with the relational model cell-for-cell. Fixture once per JVM;
-    * the query times the chain-merged census. */
+    * with the relational model cell-for-cell. */
   def mergeSqlResult(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val fixture = mergeFixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("merge_sql")
+    val fixture = graft.util.Scratch.fixture("merge_sql", dir) { f =>
       val t = s"$f/t"
       val base = Tables.orders(spark, dir).select(
         col("o_orderkey").cast("long").as("o_orderkey"),
@@ -748,8 +725,7 @@ object GraftTable {
       spark.sql(s"UPDATE graft.`$t` SET price = " +
         "CAST(price + CAST('5.00' AS DECIMAL(3,2)) AS DECIMAL(18,2)) " +
         "WHERE o_orderkey % 10 = 1")
-      f
-    })
+    }
     spark.sql(s"SELECT * FROM graft.`$fixture/t`")
       .select((col("o_orderkey") % 10).cast("long").as("bucket"), col("price"),
         graft.operators.Reconcile.xorHash60(

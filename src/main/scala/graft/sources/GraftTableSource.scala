@@ -147,15 +147,13 @@ object GraftTableDataSource {
     * 60-bit key XORs over `orders`. The branch publish lands BEFORE
     * the live census, doubling as the isolation claim: a ref publish
     * must not disturb what main serves; the tag census must equal the
-    * as-of census cell-for-cell (two read paths, one pinned truth).
-    * The store builds once per JVM (immutable afterwards); the query
-    * times the connector reads. */
+    * as-of census cell-for-cell (two read paths, one pinned truth). */
   def snapshotDsv2Result(spark: SparkSession, dir: String): DataFrame = {
     val orders = Tables.orders(spark, dir)
       .select("o_orderkey", "o_orderdate", "o_totalprice")
     val evens = orders.filter(col("o_orderkey") % 2 === 0)
-    val table = fixtures.computeIfAbsent(dir, _ => {
-      val t = graft.util.Scratch.dir("tbl_dsv2") + "/t"
+    val table = graft.util.Scratch.fixture("tbl_dsv2", dir) { f =>
+      val t = s"$f/t"
       Sinks.publishSnapshot(evens, "o_orderdate", t)
       Sinks.publishSnapshot(evens.filter(col("o_orderkey") % 4 === 0),
         "o_orderdate", t)
@@ -163,8 +161,7 @@ object GraftTableDataSource {
       Branches.publishToBranch(evens.filter(col("o_orderkey") % 8 === 0),
         "o_orderdate", t, "staged")
       Tags.createTag(spark, t, "milestone", Some(1L))
-      t
-    })
+    } + "/t"
     def census(phase: String, df: DataFrame): DataFrame =
       df.select(graft.operators.Reconcile.xorHash60(
           col("o_orderkey").cast("string")).as("h"))
@@ -179,7 +176,4 @@ object GraftTableDataSource {
         spark.read.format("graft-table").option("tag", "milestone").load(table)))
       .orderBy("phase")
   }
-
-  private val fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 }

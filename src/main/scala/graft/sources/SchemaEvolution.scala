@@ -390,16 +390,11 @@ object SchemaEvolution {
     phys.select(projection: _*)
   }
 
-  /** One evolved two-version table per source dir per JVM (same memo
-    * rationale as SnapshotDiff.publishTimeline: the fixture build is
-    * shared, the timed path is the evolved reads). */
-  private val evolved = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** v1: (o_orderkey, price, transaction_date). v2: price RENAMED to
+  /** At `<tmp>/table` — v1: (o_orderkey, price, transaction_date). v2: price RENAMED to
     * amount (id preserved via `renamedFrom`), values bumped +5.25, and
     * a `category` column ADDED. The evolution every long-lived table
     * hits: rename + add, with history still on disk under old names. */
-  private def buildEvolved(spark: SparkSession, dir: String, tmp: String): String = {
+  private def buildEvolved(spark: SparkSession, dir: String, tmp: String): Unit = {
     val table = s"$tmp/table"
     val base = Tables.orders(spark, dir)
       .filter(col("o_orderkey") % 4 =!= 0)
@@ -414,7 +409,6 @@ object SchemaEvolution {
           col("transaction_date"),
           col("o_orderpriority").as("category")),
       "transaction_date", table, renamedFrom = Map("amount" -> "price"))
-    table
   }
 
   /** Registered `q_schema_evolution`: both versions read through the
@@ -424,15 +418,13 @@ object SchemaEvolution {
     * states, so the id mapping provably round-trips values, names and
     * null semantics. */
   def evolutionResult(spark: SparkSession, dir: String): DataFrame = {
-    val table = evolved.computeIfAbsent(dir,
-      _ => buildEvolved(spark, dir, graft.util.Scratch.dir("schema_evolution_q")))
+    val table = graft.util.Scratch.fixture("schema_evolution_q", dir)(
+      buildEvolved(spark, dir, _)) + "/table"
     def asOfLive(v: Long) = readSnapshotAs(spark, table, v)
       .select(lit(v).as("src_version"), col("o_orderkey"),
         col("amount").cast("double").as("amount"), col("category"))
     asOfLive(1L).unionByName(asOfLive(2L)).orderBy("src_version", "o_orderkey")
   }
-
-  private val evolvedSql = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The SAME evolution driven through STANDARD SQL DDL instead of
     * the library calls: v1 publishes (o_orderkey, price,
@@ -447,8 +439,8 @@ object SchemaEvolution {
     *   ALTER TABLE graft.`t` DROP COLUMN priority
     *
     * interleaves evolution DDL with row-level DML so the two version
-    * states genuinely differ. */
-  private def buildEvolvedSqlTable(spark: SparkSession, dir: String, tmp: String): String = {
+    * states genuinely differ. At `<tmp>/table`. */
+  private def buildEvolvedSqlTable(spark: SparkSession, dir: String, tmp: String): Unit = {
     val table = s"$tmp/table"
     val base = Tables.orders(spark, dir)
       .filter(col("o_orderkey") % 4 =!= 0)
@@ -464,7 +456,6 @@ object SchemaEvolution {
     spark.sql(s"ALTER TABLE graft.`$table` ADD COLUMNS (category STRING)")
     spark.sql(s"UPDATE graft.`$table` SET category = priority")
     spark.sql(s"ALTER TABLE graft.`$table` DROP COLUMN priority")
-    table
   }
 
   /** Registered `q_schema_evolution_sql` (hash-oracled): the DDL-driven
@@ -477,8 +468,8 @@ object SchemaEvolution {
     * statement sequence provably lands the same id mapping the library
     * path produces. */
   def evolutionSqlResult(spark: SparkSession, dir: String): DataFrame = {
-    val table = evolvedSql.computeIfAbsent(dir,
-      _ => buildEvolvedSqlTable(spark, dir, graft.util.Scratch.dir("schema_evolution_sql_q")))
+    val table = graft.util.Scratch.fixture("schema_evolution_sql_q", dir)(
+      buildEvolvedSqlTable(spark, dir, _)) + "/table"
     val v1 = readSnapshotAs(spark, table, Tags.tagVersion(spark, table, "v1"))
       .select(lit("v1_as_live").as("phase"), col("o_orderkey"),
         col("amount").cast("double").as("amount"), col("category"))

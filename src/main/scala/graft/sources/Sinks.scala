@@ -1046,19 +1046,19 @@ object Sinks {
   }
 
   /** Registered `q_vacuum` (hash-oracled): the full crash-debris
-    * lifecycle against a constant oracle. The fixture (once per JVM)
-    * publishes v1+v2, opens a branch whose publish claims v3, plants
-    * two abandoned dirs (v4, v5 — claimed and written, never marked)
-    * and one orphan claim (c6, never written), then vacuums with NO
-    * age floor (the fixture's debris is deterministic; the age guard
-    * itself is spec-pinned in VacuumSpec). The ledger is the vacuum
-    * result PLUS the survivors — committed history and the branch
-    * version must come through untouched — so every row is a
+    * lifecycle against a constant oracle. The fixture publishes v1+v2,
+    * opens a branch whose publish claims v3, plants two abandoned dirs
+    * (v4, v5 — claimed and written, never marked) and one orphan claim
+    * (c6, never written); every call vacuums a fresh copy of it with
+    * NO age floor (the fixture's debris is deterministic; the age
+    * guard itself is spec-pinned in VacuumSpec). The ledger is the
+    * vacuum result PLUS the survivors — committed history and the
+    * branch version must come through untouched — so every row is a
     * closed-form constant. */
   def vacuumResult(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tbl = vacuumFixtures.computeIfAbsent(dir, _ => {
-      val t = graft.util.Scratch.dir("vacuum_fx") + "/t"
+    val template = graft.util.Scratch.fixture("vacuum_fx", dir) { f =>
+      val t = s"$f/t"
       val base = Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
       publishSnapshot(base, "o_orderdate", t, retainVersions = 4)
@@ -1070,21 +1070,15 @@ object Sinks {
       plantAbandonedVersion(base.limit(100), "o_orderdate", t)
       plantAbandonedVersion(base.limit(100), "o_orderdate", t)
       plantOrphanClaim(spark, t)
-      t
-    })
-    val ledger = vacuumLedgers.computeIfAbsent(tbl, _ =>
-      vacuum(spark, tbl, olderThanMs = -1000L))
+    }
+    val tbl = graft.util.Scratch.freshCopy(s"$template/t")
+    val ledger = vacuum(spark, tbl, olderThanMs = -1000L)
     val survivors =
       listVersions(spark, tbl).map(v => ("survivor_committed", v)) ++
       Branches.branchHead(spark, tbl, "side").map(v => ("survivor_branch", v))
     (ledger.map { case (v, kind) => (kind, v) } ++ survivors)
       .toDF("entry", "version").orderBy("entry", "version")
   }
-
-  private val vacuumFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val vacuumLedgers =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, String)]]()
 
   /** Small-file compaction for the versioned snapshot store — the
     * maintenance pass every append-heavy table needs at scale: many
@@ -1463,8 +1457,7 @@ object Sinks {
       .select("o_orderkey", "o_orderdate", "o_totalprice")
     val a1 = orders.filter(col("o_orderkey") % 2 === 0)
     val b1 = orders.filter(col("o_orderkey") % 2 === 1)
-    // per-JVM fixture (the q_gated_publish precedent — both contract
-    // halves built once, the query READS them): phase 1 publishes the
+    // the fixture runs both contract halves: phase 1 publishes the
     // pair, table A advances alone (the torn window), the torn-phase
     // group reads are CENSUSED AND PERSISTED while the group still
     // names phase 1 (they cannot be recomputed afterwards — that is
@@ -1477,8 +1470,7 @@ object Sinks {
         .agg(count(lit(1)).as("n_rows"), expr("bit_xor(h)").as("key_xor"))
         .select(lit(phase).as("phase"), lit(table).as("table_name"),
           col("n_rows"), col("key_xor"))
-    val fixture = groupFixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("group_fx")
+    val fixture = graft.util.Scratch.fixture("group_fx", dir) { f =>
       val grp = s"$f/grp"
       publishGroup(Seq((s"$grp/ta", a1, "o_orderdate"),
         (s"$grp/tb", b1, "o_orderdate")), grp)
@@ -1488,44 +1480,22 @@ object Sinks {
       publishGroup(Seq(
         (s"$grp/ta", a1.filter(col("o_orderkey") % 4 === 0), "o_orderdate"),
         (s"$grp/tb", b1.filter(col("o_orderkey") % 4 === 1), "o_orderdate")), grp)
-      f
-    })
+    }
     spark.read.parquet(s"$fixture/torn")
       .unionByName(census(s"$fixture/grp", "committed", "a"))
       .unionByName(census(s"$fixture/grp", "committed", "b"))
       .orderBy("phase", "table_name")
   }
 
-  private val groupFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val lifecycleFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Shared restore/history fixture: v1 class-0 data publish, v2 MoR
     * upsert link (class-20 bumps + class-7 inserts), v3 DV delete link
     * (class-30), v4 = RESTORE to version 1 — the rollback of both
-    * links as a new auditable commit. Built once per JVM. */
+    * links as a new auditable commit. */
   private def lifecycleFixture(spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    lifecycleFixtures.computeIfAbsent(dir, _ => {
-      import org.apache.spark.sql.functions._
-      val f = graft.util.Scratch.dir("restore_fixture") + "/t"
-      val base = Tables.orders(spark, dir).select(
-        col("o_orderkey").cast("long").as("o_orderkey"),
-        col("o_orderdate").cast("date").as("odate"),
-        col("o_totalprice").cast("decimal(18,2)").as("price"))
-      publishSnapshot(base.filter(col("o_orderkey") % 10 === 0), "odate", f,
-        retainVersions = 100)
-      val updates = base.filter(col("o_orderkey") % 20 === 0)
-        .withColumn("price",
-          expr("CAST(price + CAST('5.00' AS DECIMAL(3,2)) AS DECIMAL(18,2))"))
-      DeletionVectors.publishUpsert(spark, f,
-        updates.unionByName(base.filter(col("o_orderkey") % 10 === 7)),
-        "o_orderkey", updates.select("o_orderkey").limit(0), validate = false)
-      DeletionVectors.publishDeletes(spark, f,
-        base.filter(col("o_orderkey") % 30 === 0).select("o_orderkey"), "o_orderkey")
-      restoreSnapshot(spark, f, 1L, "odate", retainVersions = 100)
-      f
-    })
+    graft.util.Scratch.fixture("restore_fixture", dir) { f =>
+      GraftFeedSource.publishLifecycle(spark, dir, s"$f/t")
+      restoreSnapshot(spark, s"$f/t", 1L, "odate", retainVersions = 100)
+    } + "/t"
 
   /** Registered `q_clone` (hash-oracled): `CALL graft.system.clone` of
     * the lifecycle fixture's CHAIN-HEAD version (v3 = base + upsert
@@ -1666,16 +1636,13 @@ object JsonlDocs {
 
   // — registered round-trip ——————————————————————————————————————————
 
-  private val fixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** One JSONL export per data dir per JVM: the corpus written
+  /** One JSONL export per data dir: the corpus written
     * through the REAL export writer (split-partitioned, shard-
     * distributed, gzipped) plus one planted corrupt line that the
     * PERMISSIVE read must quarantine. */
   private def jsonlFixture(spark: SparkSession, dir: String): String =
-    fixtures.computeIfAbsent(dir, _ => {
+    graft.util.Scratch.fixture("jsonl", dir) { out =>
       import org.apache.spark.sql.functions._
-      val out = graft.util.Scratch.dir("jsonl")
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("text"), col("lang"), col("source"),
           when(col("doc_id") % 10 === 0, "val").otherwise("train").as("split"),
@@ -1683,8 +1650,7 @@ object JsonlDocs {
       Sinks.writeCorpusJsonl(docs, out)
       val bad = new java.io.FileOutputStream(s"$out/split=train/zz_corrupt.json")
       bad.write("{\"doc_id\": this is not json\n".getBytes("UTF-8")); bad.close()
-      out
-    })
+    }
 
   /** Registered `q_jsonl_roundtrip`: corpus → gzipped partitioned
     * JSONL → schema-first PERMISSIVE read → per-(lang, source)

@@ -230,8 +230,8 @@ object Wap {
     * key|status XOR) — every cell modular arithmetic over `orders`. */
   def wapResult(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val fixture = fixtures.computeIfAbsent(dir, _ => {
-      val t = graft.util.Scratch.dir("wap_fx") + "/t"
+    val fixture = graft.util.Scratch.fixture("wap_fx", dir) { f =>
+      val t = s"$f/t"
       val base = Tables.orders(spark, dir).select(
         col("o_orderkey").cast("long").as("o_orderkey"),
         col("o_orderdate").cast("date").as("odate"),
@@ -269,15 +269,10 @@ object Wap {
         .withColumn("detail", lit(0L))
         .unionByName(isolated)
         .unionByName(census("final"))
-      val f = graft.util.Scratch.dir("wap_fx_out")
       ledger.coalesce(1).write.parquet(s"$f/ledger")
-      f
-    })
+    }
     spark.read.parquet(s"$fixture/ledger").orderBy("entry")
   }
-
-  private val fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Registered `q_wap_stream` (hash-oracled): the CONTINUOUS cycle,
     * drained AvailableNow over two planted single-file drops — class-2
@@ -287,9 +282,7 @@ object Wap {
     * order the file source picks, the ledger is the same: the poison
     * batch quarantines whole with the exact `not_null:status` count
     * and the final merged state is class-0 ∪ class-2('A') — every cell
-    * closed-form over `orders`. The drop files build once per JVM; the
-    * DRAIN is the timed surface by design (the gated-ingest
-    * precedent: the stream is the operator under test). */
+    * closed-form over `orders`. */
   def wapStreamResult(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val base = Tables.orders(spark, dir).select(
@@ -297,8 +290,7 @@ object Wap {
       col("o_orderdate").cast("date").as("odate"),
       col("o_orderstatus").cast("string").as("status"),
       col("o_totalprice").cast("decimal(18,2)").as("price"))
-    val in = streamFixtures.computeIfAbsent(dir, _ => {
-      val d = graft.util.Scratch.dir("wap_stream_in")
+    val in = graft.util.Scratch.fixture("wap_stream_in", dir) { d =>
       base.filter(col("o_orderkey") % 10 === 2)
         .withColumn("status", lit("A"))
         .coalesce(1).write.parquet(s"$d/dropA")
@@ -313,28 +305,17 @@ object Wap {
           .foreach(s => fs.rename(s.getPath,
             new org.apache.hadoop.fs.Path(s"$d/$sub.parquet")))
       }
-      d
-    })
+    }
     val scratch = graft.util.Scratch.dir("wap_stream_q")
-    val tbl = s"$scratch/t"
     // colocated months: one file per month instead of tasks × months —
     // the final census and any merged fallback pay file-count (the
-    // q_stream_cdc lesson). The base STORE builds once per JVM (the
-    // band-compaction precedent) and each invocation file-copies the
-    // tree: the stream mutates its table, so runs need fresh state,
-    // but re-running the month-shuffle publish per run priced a whole
-    // Spark job into a drain whose operator under test is the stream
-    val baseStore = baseStoreFixtures.computeIfAbsent(dir, _ => {
-      val b = graft.util.Scratch.dir("wap_stream_base") + "/t"
-      Sinks.publishSnapshot(base.filter(col("o_orderkey") % 10 === 0), "odate", b,
+    // q_stream_cdc lesson). The stream mutates its table, so each
+    // invocation drains into a fresh copy of the base store
+    val baseStore = graft.util.Scratch.fixture("wap_stream_base", dir) { b =>
+      Sinks.publishSnapshot(base.filter(col("o_orderkey") % 10 === 0), "odate", s"$b/t",
         retainVersions = 1000, colocateMonths = true)
-      b
-    })
-    val conf = spark.sparkContext.hadoopConfiguration
-    val srcP = new org.apache.hadoop.fs.Path(baseStore)
-    val dstP = new org.apache.hadoop.fs.Path(tbl)
-    org.apache.hadoop.fs.FileUtil.copy(
-      srcP.getFileSystem(conf), srcP, dstP.getFileSystem(conf), dstP, false, conf)
+    }
+    val tbl = graft.util.Scratch.freshCopy(s"$baseStore/t")
     val checks = Seq(QualityGate.notNull("status"), QualityGate.unique("o_orderkey"))
     runWapIngest(
       spark.readStream.schema(base.schema).option("maxFilesPerTrigger", "1")
@@ -356,9 +337,4 @@ object Wap {
       .select(lit("final").as("entry"), col("n"), col("x"))
     reports.unionByName(qrows).unionByName(fin).orderBy("entry")
   }
-
-  private val streamFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val baseStoreFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 }

@@ -71,9 +71,6 @@ object CdcStream {
         }
       }
 
-  /** Daily cadence, like the reference's CRON trigger. */
-  def dailyTrigger: Trigger = Trigger.ProcessingTime("24 hours")
-
   /** The micro-batch's resolved source files — driver-side metadata
     * (the file source already listed them), so admission/sizing
     * decisions cost no Spark job. Falls back to a limit-1 probe for
@@ -146,39 +143,15 @@ object CdcStream {
         }
       }
 
-  /** Registered driver query for the streaming updater: the synthetic
-    * CDC base (Cdc.baseTable + the order date for snapshot
-    * partitioning) is published as the initial snapshot, the synthetic
-    * change set streams in from files, `applyUpdates` drains it in one
-    * AvailableNow batch through the SAME CdcMerge the batch path uses,
-    * and the final published snapshot is read back — so the entire
-    * streaming loop (file source → foreachBatch broadcast merge →
-    * versioned snapshot publish → manifest-resolved read) hash-checks
-    * against the batch CDC decision-matrix oracle. Multi-batch
-    * sequencing and latest-op-per-key are spec-covered
-    * (StreamingSpec). */
-  // ——— shared per-JVM fixture (the wap-stream / band-compaction
-  // precedent, and the r16 verdict's reading of it): the initial
-  // snapshot publish and the synthetic change FILES are deterministic
-  // per data dir and read-only inputs of the stream — build them once
-  // per JVM; each invocation file-copies the table template (the
-  // stream MUTATES its table, so runs need fresh state) and drains
-  // from the shared immutable change files with a fresh checkpoint.
-  // The DRAIN (+ the final manifest-resolved read) is the timed
-  // surface — re-publishing the base per run priced two fixture Spark
-  // jobs into a query whose operator under test is the stream.
-  private val fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Fixture root: `table` (published template), `changes4` (one-batch
     * multi-file drop), `changes2` (two month files, mod times pinned a
     * minute apart so the file source's mtime ordering is
-    * deterministic). */
+    * deterministic). The stream mutates its table, so each query
+    * drains into a fresh copy of the template. */
   private def fixtureRoot(spark: SparkSession, dir: String): String =
-    fixtures.computeIfAbsent(dir, _ => {
+    graft.util.Scratch.fixture("cdc_stream_fx", dir) { fx =>
       import graft.operators.Cdc
       import graft.sources.Tables
-      val fx = graft.util.Scratch.dir("cdc_stream_fx")
       // the date dimension feeds the publish AND the change-file
       // builds — cache it across those fixture jobs, release after
       val dates = Tables.orders(spark, dir)
@@ -205,27 +178,26 @@ object CdcStream {
       drop(asChanges(Cdc.changeSet(spark, dir)), "month1", t0)
       drop(asChanges(Cdc.changeSet2(spark, dir)), "month2", t0 + 60000L)
       dates.unpersist()
-      fx
-    })
-
-  /** Fresh mutable copy of the fixture's published table template. */
-  private def copyTable(spark: SparkSession, fx: String, scratch: String): String = {
-    val table = s"$scratch/table"
-    val conf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(s"$fx/table")
-    val dst = new org.apache.hadoop.fs.Path(table)
-    org.apache.hadoop.fs.FileUtil.copy(
-      src.getFileSystem(conf), src, dst.getFileSystem(conf), dst, false, conf)
-    table
-  }
+    }
 
   private def changesSchema(spark: SparkSession, path: String) =
     spark.read.parquet(path).schema
 
+  /** Registered driver query for the streaming updater: the synthetic
+    * CDC base (Cdc.baseTable + the order date for snapshot
+    * partitioning) is published as the initial snapshot, the synthetic
+    * change set streams in from files, `applyUpdates` drains it in one
+    * AvailableNow batch through the SAME CdcMerge the batch path uses,
+    * and the final published snapshot is read back — so the entire
+    * streaming loop (file source → foreachBatch broadcast merge →
+    * versioned snapshot publish → manifest-resolved read) hash-checks
+    * against the batch CDC decision-matrix oracle. Multi-batch
+    * sequencing and latest-op-per-key are spec-covered
+    * (StreamingSpec). */
   def streamCdcBatch(spark: SparkSession, dir: String): DataFrame = {
     val fx = fixtureRoot(spark, dir)
     val tmp = graft.util.Scratch.dir("cdc_stream_q")
-    val table = copyTable(spark, fx, tmp)
+    val table = graft.util.Scratch.freshCopy(s"$fx/table")
     applyUpdates(
         spark.readStream.schema(changesSchema(spark, s"$fx/changes4"))
           .parquet(s"$fx/changes4"),
@@ -250,7 +222,7 @@ object CdcStream {
   def streamCdcReplayBatch(spark: SparkSession, dir: String): DataFrame = {
     val fx = fixtureRoot(spark, dir)
     val tmp = graft.util.Scratch.dir("cdc_stream_multi_q")
-    val table = copyTable(spark, fx, tmp)
+    val table = graft.util.Scratch.freshCopy(s"$fx/table")
     applyUpdates(
         spark.readStream.schema(changesSchema(spark, s"$fx/changes2"))
           .option("maxFilesPerTrigger", 1)
@@ -272,7 +244,7 @@ object CdcStream {
   def streamCdcMorBatch(spark: SparkSession, dir: String): DataFrame = {
     val fx = fixtureRoot(spark, dir)
     val tmp = graft.util.Scratch.dir("cdc_stream_mor_q")
-    val table = copyTable(spark, fx, tmp)
+    val table = graft.util.Scratch.freshCopy(s"$fx/table")
     applyUpdatesMoR(
         spark.readStream.schema(changesSchema(spark, s"$fx/changes2"))
           .option("maxFilesPerTrigger", 1)

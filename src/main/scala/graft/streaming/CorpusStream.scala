@@ -119,27 +119,17 @@ object CorpusStream {
       .toDF("doc_id", "content_sha", "text", "lang", "source")
   }
 
-  /** value-bytes → typed document rows; shared by the Kafka entry and
-    * its broker-less spec. Malformed payloads parse to null doc_id and
-    * are dropped — same corrupt-tolerance as the file reader. */
+  /** value-bytes → typed document rows: the parse half of a Kafka
+    * ingest (`readStream.format("kafka")` with
+    * [[EventsPipeline.kafkaOptions]], then [[streamingIngestDedup]]).
+    * Malformed payloads parse to null doc_id and are dropped — same
+    * corrupt-tolerance as the file reader. */
   def parseKafkaDocs(kafkaRows: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.StringType
     kafkaRows
       .select(from_json(col("value").cast(StringType), JsonlDocs.schema).as("d"))
       .select("d.*")
       .filter(col("doc_id").isNotNull && col("text").isNotNull)
-  }
-
-  /** Production ingest entry: documents arriving as JSON values on a
-    * Kafka topic (the crawl-output bus) instead of file drops — same
-    * options contract as the events binding (EventsPipeline), same
-    * downstream dedup. No broker in the sandbox: the spec pins the
-    * options and the parse transform. */
-  def ingestKafka(spark: SparkSession, bootstrap: String, topic: String): DataFrame = {
-    val raw = spark.readStream.format("kafka")
-      .options(EventsPipeline.kafkaOptions(bootstrap, topic))
-      .load()
-    streamingIngestDedup(parseKafkaDocs(raw))
   }
 
   /** End-to-end: watched JSONL directory → content dedup → append-only
@@ -386,14 +376,10 @@ object CorpusStream {
     * admitted batch-0 state. */
   def nearDedupBatch(spark: SparkSession, dir: String): DataFrame = {
     val tmp = graft.util.Scratch.dir("corpus_stream_near_q")
-    // per-JVM fixture (the CDC stream precedent): the two JSON drops
-    // are deterministic functions of the source dir and the file
-    // source only READS the watched directory, so the drop files build
-    // once per JVM and every invocation drains them through a FRESH
-    // stream (own checkpoint, own corpus sink) — the timed surface is
-    // the two-micro-batch near-dedup drain, not fixture republishing
-    val inDir = nearDropFixtures.computeIfAbsent(dir, _ => {
-      val fx = graft.util.Scratch.dir("corpus_stream_near_fixture")
+    // the file source only READS the watched drop directory, so every
+    // invocation drains the shared drops through a FRESH stream (own
+    // checkpoint, own corpus sink)
+    val inDir = graft.util.Scratch.fixture("corpus_stream_near_fixture", dir) { fx =>
       val docs = graft.sources.Tables.documentsNarrow(spark, dir)
         .select("doc_id", "text", "lang", "source")
       val off = graft.operators.NearDedup.plantedOffset(docs, "doc_id")
@@ -425,8 +411,7 @@ object CorpusStream {
       val t0 = System.currentTimeMillis()
       drop(docs, "b0", t0)
       drop(nearCopies.unionByName(shortExact), "b1", t0 + 60000L)
-      s"$fx/in"
-    })
+    } + "/in"
     runNearDedup(spark, inDir, s"$tmp/corpus", s"$tmp/ckpt",
       threshold = 0.5, availableNow = true, maxFilesPerTrigger = 1)
       .awaitTermination()
@@ -446,15 +431,12 @@ object CorpusStream {
     * compaction is rejected, a fresh document admitted. */
   def bandCompactionResult(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // per-JVM fixture (media/timeline precedent): the two minhash
-    // admission passes are SETUP for the maintenance lifecycle this
-    // query claims to time (fold + post-compaction probe), so build
-    // the admitted state once per source dir — but compaction DELETES
-    // index partitions and the probe appends batch=2, so each
-    // invocation mutates a fresh scratch COPY of that state (a small
-    // parquet tree; the copy is cheap next to a signature pass)
-    val fixture = bandFixtures.computeIfAbsent(dir, _ => {
-      val base = graft.util.Scratch.dir("band_compact_fixture") + "/corpus"
+    // the two minhash admission passes are the INPUT of the
+    // maintenance lifecycle this query times (fold + post-compaction
+    // probe); compaction deletes index partitions and the probe
+    // appends batch=2, so each invocation works on a fresh copy
+    val fixture = graft.util.Scratch.fixture("band_compact_fixture", dir) { f =>
+      val base = s"$f/corpus"
       // half the corpus is plenty for a maintenance-lifecycle ledger —
       // the minhash signature pass dominates admission cost
       val d = graft.sources.Tables.documents(spark, dir)
@@ -462,16 +444,8 @@ object CorpusStream {
         .select("doc_id", "text", "lang", "source")
       admitNearBatch(d.filter(col("doc_id") % 4 === 0), base, 0L, 0.5)
       admitNearBatch(d.filter(col("doc_id") % 4 === 2), base, 1L, 0.5)
-      base
-    })
-    val tmp = graft.util.Scratch.dir("band_compact_q")
-    val corpus = s"$tmp/corpus"
-    val conf = spark.sparkContext.hadoopConfiguration
-    val srcP = new org.apache.hadoop.fs.Path(fixture)
-    val dstP = new org.apache.hadoop.fs.Path(corpus)
-    org.apache.hadoop.fs.FileUtil.copy(
-      srcP.getFileSystem(conf), srcP, dstP.getFileSystem(conf), dstP,
-      false, conf)
+    }
+    val corpus = graft.util.Scratch.freshCopy(s"$fixture/corpus")
     val docs = graft.sources.Tables.documents(spark, dir)
       .filter(col("doc_id") % 2 === 0)
       .select("doc_id", "text", "lang", "source")
@@ -516,12 +490,6 @@ object CorpusStream {
       ("post_compact_probe_admitted", admitted2))
       .toDF("metric", "value").orderBy("metric")
   }
-
-  private val bandFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val nearDropFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   // ——— streaming gated ingest ————————————————————————————————————————
 

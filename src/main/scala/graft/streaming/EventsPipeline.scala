@@ -101,8 +101,8 @@ object EventsPipeline {
     StructField("value", DoubleType, nullable = true),
     StructField("props", StringType, nullable = true)))
 
-  /** The Kafka source options the production binding uses — the Spark
-    * analog of the reference's consumer config (lib_kafka.py
+  /** The Kafka source options of a broker-fed events or corpus stream
+    * — the Spark analog of the reference's consumer config (lib_kafka.py
     * create_consumer: bootstrap servers, topic subscription, earliest
     * auto-offset-reset; group-id/commit management is replaced by
     * Spark's checkpointed offsets). `failOnDataLoss=false` matches the
@@ -116,24 +116,11 @@ object EventsPipeline {
     "failOnDataLoss" -> "false",
     "maxOffsetsPerTrigger" -> "1000000")
 
-  /** Production streaming entry: the same windowed aggregate over a
-    * Kafka topic (`readStream.format("kafka")`) — value is the
-    * JSON-serialized event, as produced by the reference's
-    * lib_kafka.py producers. Malformed payloads parse to null and are
-    * dropped (corrupt-tolerant like the CSV ingest). No broker exists
-    * in the test sandbox, so the spec pins the options contract and
-    * the parse transform; the plan is otherwise identical to
-    * eventsWindowStream. */
-  def eventsWindowKafka(spark: SparkSession, bootstrap: String, topic: String): DataFrame = {
-    val raw = spark.readStream.format("kafka")
-      .options(kafkaOptions(bootstrap, topic))
-      .load()
-    windowedAgg(parseKafkaEvents(raw), withWatermark = true)
-  }
-
-  /** value-bytes → typed event rows; shared by the Kafka entry and its
-    * broker-less spec (which feeds the same binary-value shape from a
-    * MemoryStream). */
+  /** value-bytes → typed event rows: the parse half of a Kafka source
+    * (`readStream.format("kafka").options(kafkaOptions(..))`, then
+    * `windowedAgg(parseKafkaEvents(raw), withWatermark = true)`).
+    * Malformed payloads parse to null and are dropped (corrupt-tolerant
+    * like the CSV ingest). */
   def parseKafkaEvents(kafkaRows: DataFrame): DataFrame =
     kafkaRows
       .select(from_json(col("value").cast(StringType), eventJsonSchema).as("e"))
@@ -151,15 +138,6 @@ object EventsPipeline {
       col("user_id").cast(StringType).cast(BinaryType).as("key"),
       to_json(struct(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"), col("props"))).cast(BinaryType).as("value"))
-
-  /** Production publish entry: `df.writeStream.format("kafka")` over
-    * the encoded rows (no broker in the sandbox — the encode transform
-    * is what the spec covers). */
-  def publishEventsKafka(events: DataFrame, bootstrap: String,
-                         topic: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    encodeKafkaEvents(events).writeStream.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrap)
-      .option("topic", topic)
 
   /** The data-decision service as a stateful stream: for each file
     * series (key), compare the incoming content hash with the LAST

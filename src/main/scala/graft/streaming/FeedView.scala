@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.{DeletionVectors, Sinks, Tables}
 
 /** FEED-DRIVEN INCREMENTAL MATERIALIZED VIEW — the streaming twin of
   * [[graft.operators.SnapshotDiff.refreshAgg]]: a monthly aggregate
@@ -117,7 +116,7 @@ object FeedView {
                    max(priceCol).cast("decimal(18,2)").as("max_price"))
                else Nil)
             val next =
-              if (!snap.isEmpty) // full replace: re-key from the baseline
+              if (hasSnap) // full replace: re-key from the baseline
                 snap.groupBy(monthOf(col(dateCol)).as("month"))
                   .agg(snapAggs.head, snapAggs.tail: _*)
               else {
@@ -236,16 +235,20 @@ object FeedView {
                   // range-predicated on the date column so parquet
                   // row-group stats skip untouched months' files (the
                   // month-partitioned layout makes file min/max tight).
+                  // the observed dates' class follows
+                  // spark.sql.datetime.java8API.enabled
                   val dirtyMonths = obsDirty.get.apply("dirty")
-                    .asInstanceOf[scala.collection.Seq[java.sql.Date]].toSeq
+                    .asInstanceOf[scala.collection.Seq[Any]].toSeq.map {
+                      case d: java.sql.Date       => d.toLocalDate
+                      case d: java.time.LocalDate => d
+                    }
                   if (dirtyMonths.isEmpty)
                     foldedC.select(col("month"), col("n_live"), col("cnt_price"),
                       col("sum_price"),
                       col("min_fold").cast("decimal(18,2)").as("min_price"),
                       col("max_fold").cast("decimal(18,2)").as("max_price"))
                   else {
-                    val ranges = dirtyMonths.map { m =>
-                      val start = m.toLocalDate
+                    val ranges = dirtyMonths.map { start =>
                       (col(dateCol) >= lit(java.sql.Date.valueOf(start))) &&
                         (col(dateCol) < lit(java.sql.Date.valueOf(start.plusMonths(1))))
                     }.reduce(_ || _)
@@ -311,32 +314,15 @@ object FeedView {
      else writer).start()
   }
 
-  private val fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The shared three-commit source store (class-0 baseline snapshot,
-    * class-20/class-7 upsert link, class-30 delete link) — built once
-    * per JVM and read-only thereafter; `q_incr_agg_stream` and
-    * `q_mv_rewrite` both maintain views FROM it into fresh state. */
+  /** The three-commit lifecycle store
+    * ([[graft.sources.GraftFeedSource.publishLifecycle]]) of
+    * `q_incr_agg_stream`, `q_mv_rewrite` and `q_mv_rewrite_multi`,
+    * which maintain views FROM it into fresh state. Its own copy: the
+    * view registrations those queries leave armed live on the source
+    * table. */
   private def sourceFixture(spark: SparkSession, dir: String): String =
-    fixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("feed_view_src") + "/t"
-      val base = Tables.orders(spark, dir).select(
-        col("o_orderkey").cast("long").as("o_orderkey"),
-        col("o_orderdate").cast("date").as("odate"),
-        col("o_totalprice").cast("decimal(18,2)").as("price"))
-      Sinks.publishSnapshot(base.filter(col("o_orderkey") % 10 === 0), "odate", f,
-        retainVersions = 100)
-      val updates = base.filter(col("o_orderkey") % 20 === 0)
-        .withColumn("price",
-          expr("CAST(price + CAST('5.00' AS DECIMAL(3,2)) AS DECIMAL(18,2))"))
-      DeletionVectors.publishUpsert(spark, f,
-        updates.unionByName(base.filter(col("o_orderkey") % 10 === 7)),
-        "o_orderkey", updates.select("o_orderkey").limit(0), validate = false)
-      DeletionVectors.publishDeletes(spark, f,
-        base.filter(col("o_orderkey") % 30 === 0).select("o_orderkey"), "o_orderkey")
-      f
-    })
+    graft.util.Scratch.fixture("feed_view_src", dir)(f =>
+      graft.sources.GraftFeedSource.publishLifecycle(spark, dir, s"$f/t")) + "/t"
 
   /** Registered `q_mv_rewrite` (hash-oracled): the full
     * maintain-register-rewrite composition. The feed view folds the
@@ -451,9 +437,8 @@ object FeedView {
     * class-20/class-7 upsert link and class-30 delete link → signed
     * deltas), then compared against the closed-form monthly census of
     * the FINAL merged state — stream-maintained ≡ full recompute, the
-    * same contract `q_incr_agg` pins for batch diffs. The source
-    * builds once per JVM; each invocation drains into a fresh state
-    * dir (the drain + folds are the timed surface). */
+    * same contract `q_incr_agg` pins for batch diffs. Each invocation
+    * drains into a fresh state dir. */
   def incrAggStreamResult(spark: SparkSession, dir: String): DataFrame = {
     val src = sourceFixture(spark, dir)
     val scratch = graft.util.Scratch.dir("feed_view_q")

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.{DeletionVectors, Sinks, Tables}
+import graft.sources.{DeletionVectors, Sinks}
 
 /** CONTINUOUS TABLE REPLICATION — the change feed consumed end-to-end:
   * `spark.readStream.format("graft-table")` tails the SOURCE store's
@@ -65,35 +65,14 @@ object TableMirror {
      else writer).start()
   }
 
-  private val fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Registered `q_table_mirror` (hash-oracled): replicate the
     * three-commit lifecycle (class-0 baseline → class-20/class-7
     * upsert link → class-30 delete link) through the feed into a
     * fresh mirror store, then census the MIRROR's merged state —
     * which must equal the source's merged state, closed-form over
-    * `orders`. The source builds once per JVM; each invocation mirrors
-    * into a fresh destination (the drain is the timed surface). */
+    * `orders`. Each invocation mirrors into a fresh destination. */
   def tableMirrorResult(spark: SparkSession, dir: String): DataFrame = {
-    val src = fixtures.computeIfAbsent(dir, _ => {
-      val f = graft.util.Scratch.dir("mirror_src") + "/t"
-      val base = Tables.orders(spark, dir).select(
-        col("o_orderkey").cast("long").as("o_orderkey"),
-        col("o_orderdate").cast("date").as("odate"),
-        col("o_totalprice").cast("decimal(18,2)").as("price"))
-      Sinks.publishSnapshot(base.filter(col("o_orderkey") % 10 === 0), "odate", f,
-        retainVersions = 100)
-      val updates = base.filter(col("o_orderkey") % 20 === 0)
-        .withColumn("price",
-          expr("CAST(price + CAST('5.00' AS DECIMAL(3,2)) AS DECIMAL(18,2))"))
-      DeletionVectors.publishUpsert(spark, f,
-        updates.unionByName(base.filter(col("o_orderkey") % 10 === 7)),
-        "o_orderkey", updates.select("o_orderkey").limit(0), validate = false)
-      DeletionVectors.publishDeletes(spark, f,
-        base.filter(col("o_orderkey") % 30 === 0).select("o_orderkey"), "o_orderkey")
-      f
-    })
+    val src = graft.sources.GraftFeedSource.lifecycleStore(spark, dir)
     val scratch = graft.util.Scratch.dir("mirror_q")
     val dst = s"$scratch/mirror"
     runTableMirror(spark, src, dst, s"$scratch/ckpt", "o_orderkey", "odate",

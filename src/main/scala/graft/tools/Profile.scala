@@ -179,127 +179,6 @@ object Profile {
             println(f"JOBS $n%-24s pass=$i wall=$wall%7.3f jobs=${jobs.get()}%4d tasks=${tasks.get()}%5d taskTime=${taskMs.get() / 1e3}%8.2fs")
           }
         }
-      case "ppjoin2" =>
-        val docs = Tables.documents(spark, sfDir)
-        val threshold = 0.5
-        val p = math.round(threshold * 1000000L)
-        def pairsCkpt(eager: Boolean): DataFrame = {
-          val prefixLen = expr(s"cast(nsh - ((nsh * ${p}L + 999999L) div 1000000L) + 1 as int)")
-          val sh = NearDedup.shingles(docs)
-          val freq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-          val sets = sh.join(freq, "shingle")
-            .groupBy("doc_id")
-            .agg(array_sort(collect_list(struct(col("df"), col("shingle")))).as("fs"))
-            .withColumn("s", transform(col("fs"), x => x.getField("shingle")))
-            .withColumn("nsh", size(col("s")).cast(org.apache.spark.sql.types.LongType))
-            .withColumn("prefix",
-              transform(slice(col("fs"), lit(1), prefixLen), x => x.getField("shingle")))
-            .drop("fs")
-            .localCheckpoint(eager)
-          val indexed = sets.select(col("doc_id"), col("nsh"), posexplode(col("prefix")))
-            .select(col("doc_id"), col("nsh"), col("pos").cast("long").as("pos"),
-              col("col").as("shingle"))
-          val cand = indexed.as("a").join(indexed.as("b"),
-              col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id") &&
-              col("a.nsh") * 1000000L >= col("b.nsh") * p &&
-              col("b.nsh") * 1000000L >= col("a.nsh") * p &&
-              expr(s"1L + least(a.nsh - 1L - a.pos, b.nsh - 1L - b.pos) >= " +
-                s"((a.nsh + b.nsh) * ${p}L + ${1000000L + p - 1L}L) div ${1000000L + p}L"))
-            .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-            .distinct()
-          cand
-            .join(sets.select(col("doc_id").as("id_a"), col("s").as("s_a"), col("nsh").as("n_a")), "id_a")
-            .join(sets.select(col("doc_id").as("id_b"), col("s").as("s_b"), col("nsh").as("n_b")), "id_b")
-            .withColumn("n_common", size(array_intersect(col("s_a"), col("s_b"))).cast(org.apache.spark.sql.types.LongType))
-            .filter(col("n_common").cast("double") /
-              (col("n_a") + col("n_b") - col("n_common")) >= threshold)
-            .select("id_a", "id_b")
-        }
-        time("pairs_baseline")(NearDedup.ngramJaccardOf(docs, threshold))
-        time("pairs_sets_ckpt_lazy")(pairsCkpt(false))
-        time("pairs_sets_ckpt_eager")(pairsCkpt(true))
-        time("pairs_baseline_again")(NearDedup.ngramJaccardOf(docs, threshold))
-      case "ppjoin3" =>
-        // A/B the shingle-chain exchange shape: baseline (distinct on
-        // (doc,shingle) → freq reshuffle → join reshuffle) vs a single
-        // up-front repartition(shingle) that the distinct, the freq
-        // aggregation, and the freq join can all ride (hash on a SUBSET
-        // of the grouping keys satisfies ClusteredDistribution).
-        val docs = Tables.documents(spark, sfDir)
-        val threshold = 0.5
-        val p = math.round(threshold * 1000000L)
-        def pairsRepart(): DataFrame = {
-          val prefixLen = expr(s"cast(nsh - ((nsh * ${p}L + 999999L) div 1000000L) + 1 as int)")
-          val words = split(
-            regexp_replace(lower(col("text")), "^\\s+|\\s+$", ""), "\\s+")
-          val raw = docs
-            .select(col("doc_id"), words.as("w"))
-            .filter(size(col("w")) >= 3)
-            .select(col("doc_id"), col("w"),
-              explode(sequence(lit(0), size(col("w")) - 3)).as("i"))
-            .select(col("doc_id"),
-              xxhash64(concat_ws(" ", slice(col("w"), col("i") + 1, lit(3)))).as("shingle"))
-          val sh = raw.repartition(col("shingle")).distinct()
-          val freq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-          val sets = sh.join(freq, "shingle")
-            .groupBy("doc_id")
-            .agg(array_sort(collect_list(struct(col("df"), col("shingle")))).as("fs"))
-            .withColumn("s", transform(col("fs"), x => x.getField("shingle")))
-            .withColumn("nsh", size(col("s")).cast(org.apache.spark.sql.types.LongType))
-            .withColumn("prefix",
-              transform(slice(col("fs"), lit(1), prefixLen), x => x.getField("shingle")))
-          val indexed = sets.select(col("doc_id"), col("nsh"), posexplode(col("prefix")))
-            .select(col("doc_id"), col("nsh"), col("pos").cast("long").as("pos"),
-              col("col").as("shingle"))
-          val cand = indexed.as("a").join(indexed.as("b"),
-              col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id") &&
-              col("a.nsh") * 1000000L >= col("b.nsh") * p &&
-              col("b.nsh") * 1000000L >= col("a.nsh") * p &&
-              expr(s"1L + least(a.nsh - 1L - a.pos, b.nsh - 1L - b.pos) >= " +
-                s"((a.nsh + b.nsh) * ${p}L + ${1000000L + p - 1L}L) div ${1000000L + p}L"))
-            .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-            .distinct()
-          cand
-            .join(sets.select(col("doc_id").as("id_a"), col("s").as("s_a"), col("nsh").as("n_a")), "id_a")
-            .join(sets.select(col("doc_id").as("id_b"), col("s").as("s_b"), col("nsh").as("n_b")), "id_b")
-            .withColumn("n_common", size(array_intersect(col("s_a"), col("s_b"))).cast(org.apache.spark.sql.types.LongType))
-            .filter(col("n_common").cast("double") /
-              (col("n_a") + col("n_b") - col("n_common")) >= threshold)
-            .select("id_a", "id_b")
-        }
-        time("pairs_baseline")(NearDedup.ngramJaccardOf(docs, threshold))
-        time("pairs_repart_shingle")(pairsRepart())
-        time("pairs_baseline_again")(NearDedup.ngramJaccardOf(docs, threshold))
-        time("pairs_repart_again")(pairsRepart())
-        val nb = NearDedup.ngramJaccardOf(docs, threshold).count()
-        val nr = pairsRepart().count()
-        val diff = NearDedup.ngramJaccardOf(docs, threshold)
-          .except(pairsRepart()).count() +
-          pairsRepart().except(NearDedup.ngramJaccardOf(docs, threshold)).count()
-        println(s"PPJOIN3 baseline=$nb repart=$nr symmetric_diff=$diff")
-      case "export2" =>
-        // A/B the export tail: as-shipped (surviving/kept as repeated
-        // subtrees of one action) vs eager checkpoints at the
-        // surviving and kept boundaries.
-        val docs = Tables.documents(spark, sfDir)
-        val corpus = docs.filter(col("doc_id") % 20 =!= 0)
-        val benchmark = docs.filter(col("doc_id") % 20 === 0)
-        def exportCkpt(): DataFrame = {
-          val clean = NearDedup.cleanCorpus(corpus, exactPairs = true).localCheckpoint()
-          val uncontaminated = NearDedup.decontaminateOf(clean, benchmark)
-            .filter(col("is_contaminated") === 0).select("doc_id")
-          val surviving = clean.join(uncontaminated, "doc_id").localCheckpoint()
-          val sampled = TextOps.stratifiedSampleOf(surviving, TextOps.sampleRates).select("doc_id")
-          val kept = surviving.join(sampled, "doc_id").localCheckpoint()
-          val split = TextOps.splitAssignOf(kept).select("doc_id", "split")
-          TextOps.packSequencesOf(kept.join(split, "doc_id"),
-              nShards = TextOps.packShardsFor(corpus.count()), groupCols = Seq("split"))
-            .orderBy("doc_id")
-        }
-        time("export_shipped")(graft.operators.CorpusExport.exportCorpus(spark, sfDir))
-        time("export_ckpt_tail")(exportCkpt())
-        time("export_shipped_again")(graft.operators.CorpusExport.exportCorpus(spark, sfDir))
-        time("export_ckpt_again")(exportCkpt())
       case "rank" =>
         // A/B PageRank iteration materialization: the unrolled linear
         // DAG (current pageRankOf) vs an eager localCheckpoint per
@@ -334,44 +213,6 @@ object Profile {
         time("rank_ckpt_per_iter")(rankCkptPerIter(3).orderBy("node"))
         time("rank_unrolled_again")(graft.operators.GraphRank.pageRankOf(edges, 3).orderBy("node"))
         time("rank_ckpt_again")(rankCkptPerIter(3).orderBy("node"))
-      case "cc" =>
-        val docs = Tables.documents(spark, sfDir)
-        val quality = TextOps.qualityScoreOf(docs)
-          .filter(col("n_tokens") >= 5 && col("alpha_ratio") >= 0.5)
-          .select("doc_id")
-        val qualified = docs.join(quality, "doc_id")
-        val pairs = NearDedup.ngramJaccardOf(qualified, 0.5).select("id_a", "id_b")
-        def t[A](name: String)(f: => A): A = {
-          val t0 = System.nanoTime(); val r = f
-          println(f"STEP $name%-28s ${(System.nanoTime() - t0) / 1e9}%7.3f"); r
-        }
-        (1 to 3).foreach { pass =>
-          println(s"--- pass $pass ---")
-          val p0 = t("pairs_ckpt") {
-            pairs.select(col("id_a").as("src"), col("id_b").as("dst")).localCheckpoint(true)
-          }
-          t("isEmpty")(p0.isEmpty)
-          val edges = t("edges_ckpt") {
-            p0.union(p0.select(col("dst").as("src"), col("src").as("dst")))
-              .repartition(col("dst")).localCheckpoint(true)
-          }
-          var labels = t("labels_ckpt") {
-            edges.select(col("src").as("id")).distinct()
-              .withColumn("label", col("id")).localCheckpoint(true)
-          }
-          var changed = 1L
-          var round = 0
-          while (changed > 0) {
-            round += 1
-            val prop = edges.join(labels, edges("dst") === labels("id"))
-              .select(col("src").as("id"), col("label"))
-              .union(labels)
-              .groupBy("id").agg(min(col("label")).as("new_label"))
-            val joined = t(s"round$round joined_ckpt")(labels.join(prop, "id").localCheckpoint(true))
-            changed = t(s"round$round count")(joined.filter(col("new_label") < col("label")).count())
-            labels = joined.select(col("id"), col("new_label").as("label"))
-          }
-        }
       case other =>
         System.err.println(s"unknown section $other")
     }

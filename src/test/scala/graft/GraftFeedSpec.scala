@@ -392,6 +392,31 @@ class GraftFeedSpec extends AnyFunSuite {
     } finally MatViews.unregister(tbl)
   }
 
+  test("feed view repairs dirty-month extremes under the java.time date API") {
+    val base = graft.util.Scratch.dir("feed_view_java8")
+    val tbl = s"$base/t"
+    val rows = (1L to 10L).map(i => (i, java.sql.Date.valueOf("2024-05-15"),
+        java.math.BigDecimal.valueOf(i * 100L, 2)))
+      .toDF("k", "d", "p").withColumn("p", col("p").cast("decimal(18,2)"))
+    Sinks.publishSnapshot(rows, "d", tbl, retainVersions = 100)
+    def drain(): Unit = graft.streaming.FeedView.runFeedAgg(spark, tbl,
+      s"$base/state", s"$base/ckpt", dateCol = "d", priceCol = "p",
+      availableNow = true).awaitTermination()
+    drain()
+    // v2 retires both stored extremes (k=1 holds the min, k=10 the
+    // max), so the fold must recompute the month from the base
+    DeletionVectors.publishDeletes(spark, tbl, Seq(1L, 10L).toDF("k"), "k")
+    val key = "spark.sql.datetime.java8API.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try drain()
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val st = graft.streaming.FeedView.readAgg(spark, s"$base/state")
+      .select("n_live", "min_price", "max_price").collect()
+      .map(r => (r.getLong(0), r.getDecimal(1).doubleValue(), r.getDecimal(2).doubleValue()))
+    assert(st.toSeq == Seq((8L, 2.0, 9.0)))
+  }
+
   test("point-read options and empty stores are rejected up front") {
     val base = graft.util.Scratch.dir("feed_opts")
     val tbl = s"$base/t"
